@@ -5,8 +5,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Session factory for the graft engine.
   *
   * Config rationale (SURVEY.md §7, FIXTURES.md §B):
-  *  - `spark.sql.shuffle.partitions=32` matches local[32]; on a real cluster
-  *    this is overridden (or AQE coalesces) — never the 200 default.
+  *  - `spark.sql.shuffle.partitions` = the master's task slots
+  *    ([[GraftSession.taskSlots]]): `local[N]`/`local[N,F]` → N, `local[*]`
+  *    → the JVM's cores, `local` → 1, and 32 for a non-local master (never
+  *    the 200 default). A `.config` after `builder(...)` overrides it. For
+  *    batch lanes this is the shuffle width; for streaming it is also the
+  *    state layout: a stateful query fixes its state-store partition count
+  *    in its checkpoint when the checkpoint is created (a restart keeps it
+  *    whatever the session then says), and every state store pays a fixed
+  *    commit cost on every micro-batch — ≈180 ms per RocksDB store on a
+  *    4-core VM, rows or no rows — so 32 stores on 4 cores made
+  *    `dedupByContent`'s commit the dominant layer of a drain batch.
   *  - AQE on: runtime join-strategy switching + skew-join splitting + shuffle
   *    partition coalescing are the 100 TB safety net.
   *  - `spark.sql.legacy.parquet.nanosAsLong=true`: driver test data has
@@ -54,12 +63,24 @@ object GraftSession {
   lazy val codegenCacheEntries: Int =
     math.max(12288, 80 * SparkEntry.baseQueries.size)
 
+  private val LocalN = """local\[(\d+|\*)(?:\s*,\s*\d+)?\]""".r
+
+  /** Task slots `master` offers: the builder's shuffle and state
+    * partition count (mapping in the shuffle-partitions bullet above). */
+  def taskSlots(master: String): Int =
+    master match {
+      case "local" => 1
+      case LocalN("*") => Runtime.getRuntime.availableProcessors
+      case LocalN(n) => n.toInt
+      case _ => 32
+    }
+
   def builder(master: String = "local[32]"): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
       .appName("graft")
       .withExtensions(new GraftExtensions) // graft_cosine/java_string_hash SQL fns + HOF-cosine fusion rule
-      .config("spark.sql.shuffle.partitions", "32")
+      .config("spark.sql.shuffle.partitions", taskSlots(master).toString)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

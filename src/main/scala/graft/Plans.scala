@@ -59,8 +59,7 @@ object Plans {
   def main(args: Array[String]): Unit = {
     val out = if (args.nonEmpty) args(0) else "docs/PLANS.md"
     val dir = if (args.length > 1) args(1) else "/root/testdata/sf0.001"
-    val spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4").getOrCreate()
+    val spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# Physical plans (generated by `graft.Plans`)\n\n")

@@ -14,7 +14,6 @@ object Prof {
     val runs = if (args.length > 2) args(2).toInt else 3
     val cpus = if (args.length > 3) args(3) else "32"
     var b = GraftSession.builder(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
     if (args.length > 4 && args(4).nonEmpty)
       args(4).split(',').filter(_.nonEmpty).foreach { tok =>
         val kv = tok.split("=", 2)

@@ -220,8 +220,7 @@ object ScanAudit {
     java.util.Locale.setDefault(java.util.Locale.ROOT)
     val dir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val mode = if (args.length > 1) args(1) else ""
-    val spark = GraftSession.builder("local[8]")
-      .config("spark.sql.shuffle.partitions", "8").getOrCreate()
+    val spark = GraftSession.builder("local[8]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val rc: Int = mode match {
       case "--emit" =>

@@ -44,8 +44,10 @@ import org.apache.spark.sql.streaming.Trigger
   *    through to [[graft.streaming.StreamingPipeline.kafkaSource]],
   *    [[HttpSchemaRegistryClient]], and the JDBC sink verbatim.
   *
-  * PipelineSpec round-trips all three SHIPPED reference files read
-  * verbatim from `/root/reference/` against this mapping. */
+  * PipelineSpec round-trips all three SHIPPED reference files against
+  * this mapping: read verbatim from a reference checkout when one is
+  * present, else from the minimal copies of their keys under
+  * `src/test/resources/reference`. */
 final case class PipelineConfig(props: Map[String, String]) {
 
   def get(key: String): Option[String] = props.get(key)

@@ -23,9 +23,7 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   var idxPath: String = _
 
   override def beforeAll(): Unit = {
-    spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     idxPath = java.nio.file.Files.createTempDirectory("graft_ann_idx_spec")
       .resolve("idx").toString

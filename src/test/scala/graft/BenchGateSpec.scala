@@ -16,9 +16,7 @@ class BenchGateSpec extends AnyFunSuite with BeforeAndAfterAll {
   var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("FATAL") // the crashed lane logs on stderr by design
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()

@@ -15,12 +15,22 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
+
+  test("builder sizes shuffle partitions to local[N]; a later .config wins") {
+    val key = "spark.sql.shuffle.partitions"
+    assert(spark.conf.get(key) == "4")
+    // getOrCreate hands back this suite's session with the builder's
+    // runtime confs applied, so no second session is built
+    try {
+      val s = GraftSession.builder("local[4]").config(key, "7").getOrCreate()
+      assert(s eq spark)
+      assert(spark.conf.get(key) == "7")
+    } finally spark.conf.set(key, "4")
+  }
 
   test("graft_cosine is SQL-callable and computes the fused kernel") {
     val got = spark.sql(

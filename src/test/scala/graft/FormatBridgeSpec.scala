@@ -18,9 +18,7 @@ class FormatBridgeSpec extends AnyFunSuite with BeforeAndAfterAll {
   var base: String = _
 
   override def beforeAll(): Unit = {
-    spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     base = Files.createTempDirectory("graft_fmt").toString
   }

@@ -16,9 +16,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -468,14 +466,17 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("PipelineConfig round-trips the three SHIPPED reference config files (r9 verdict #7)") {
     val refRoot = java.nio.file.Path.of("/root/reference")
-    assume(java.nio.file.Files.isDirectory(refRoot), "reference checkout absent")
+    // without a reference checkout, read the minimal copies under
+    // src/test/resources/reference (same layout, the values BASELINE.md cites)
+    val root = if (java.nio.file.Files.isDirectory(refRoot)) refRoot
+      else java.nio.file.Path.of(getClass.getResource("/reference").toURI)
     import graft.pipeline.PipelineConfig
     val infra = PipelineConfig.load(
-      refRoot.resolve("01-infra/src/main/resources/config.properties"))
+      root.resolve("01-infra/src/main/resources/config.properties"))
     val producer = PipelineConfig.load(
-      refRoot.resolve("02-producer/src/main/resources/config.properties"))
+      root.resolve("02-producer/src/main/resources/config.properties"))
     val consumer = PipelineConfig.load(
-      refRoot.resolve("03-consumer/src/main/resources/config.properties"))
+      root.resolve("03-consumer/src/main/resources/config.properties"))
 
     // 01-infra -> the R4 lifecycle's n x r (DataPipeline.java:82-83)
     assert(infra.topicPartitionCount == 3 && infra.topicReplicaFactor == 3.toShort)

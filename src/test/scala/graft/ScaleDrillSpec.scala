@@ -16,9 +16,7 @@ class ScaleDrillSpec extends AnyFunSuite with BeforeAndAfterAll {
   var outDir: String = _
 
   override def beforeAll(): Unit = {
-    spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     outDir = java.nio.file.Files.createTempDirectory("graftdrill").toString
   }

@@ -18,7 +18,6 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def beforeAll(): Unit = {
     spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graftwh").toString)
       .getOrCreate()

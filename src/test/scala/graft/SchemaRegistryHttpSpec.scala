@@ -101,8 +101,7 @@ class SchemaRegistryHttpSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def beforeAll(): Unit = {
     server = new RegistryServer
     client = new HttpSchemaRegistryClient(s"http://127.0.0.1:${server.port}")
-    spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4").getOrCreate()
+    spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
   }
   override def afterAll(): Unit = {

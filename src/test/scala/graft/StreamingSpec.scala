@@ -21,9 +21,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   var spark: SparkSession = _
 
   override def beforeAll(): Unit = {
-    spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
   }
   override def afterAll(): Unit = if (spark != null) spark.stop()
@@ -1578,6 +1576,75 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       sink, ckpt, Trigger.AvailableNow())
     q2.awaitTermination(60000)
     assert(sink.dataCount() == 1000, s"exactly-once violated: ${sink.dataCount()}")
+  }
+
+  test("a checkpoint keeps its state partition count when the session default " +
+      "changes: decodeAuto -> dedupByContent -> txn sink, 8 then 4") {
+    // The session default follows the master's task slots, so a
+    // checkpoint created under one default can restart under another.
+    // Spark restores the count from the offset log: the restarted query
+    // keeps 8 state partitions and lands every row exactly once.
+    import graft.pipeline.{ConfluentAvro, SchemaRegistry}
+    val partsKey = "spark.sql.shuffle.partitions"
+    val sessionParts = spark.conf.get(partsKey)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    spark.conf.set(partsKey, "8")
+    try {
+      val tmp = java.nio.file.Files.createTempDirectory("graftckparts")
+      val srcDir = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
+      val url = s"jdbc:derby:$tmp/db;create=true"
+      val avro = SchemaBridge.toAvro(graft.schema.SimpleSchema("ckparts",
+        Seq("key" -> "string", "ts" -> "long", "text" -> "string")))
+      val id = SchemaRegistry.register("ckparts-value", avro)
+      val distinct = 200L; val baseMs = 1704067200000L
+      // file f: `distinct` rows, each framed twice (dedup fodder), event
+      // times inside 200 ms, files an hour apart
+      def rows(f: Int) = spark.range(2 * distinct).select(
+        concat(lit(s"k$f-"), col("id") % distinct).as("key"),
+        (lit(baseMs + f * 3600000L) + col("id") % distinct).as("ts"),
+        concat(lit(s"file$f doc "), col("id") % distinct).as("text"))
+      def land(f: Int): Unit =
+        ConfluentAvro.encode(rows(f), avro, id, 1).coalesce(1)
+          .write.mode("append").parquet(srcDir)
+      def run(): Seq[Int] = {
+        val stream = StreamingPipeline.fileSource(
+          spark, srcDir, spark.read.parquet(srcDir).schema, maxFilesPerTrigger = 1)
+        val deduped = StreamOps.dedupByContent(
+          ConfluentAvro.decodeAuto(stream, "value", avro)
+            .withColumn("event_time", timestamp_millis(col("ts"))),
+          "event_time", watermark = "10 minutes").drop("event_time")
+        val sink = new TransactionalJdbcSink(url, "ckparts", "ckparts-q")
+        sink.ensureTables(deduped.schema)
+        val q = StreamingPipeline.toJdbc(deduped, sink, ckpt)
+        try assert(q.awaitTermination(120000), "stream did not drain")
+        finally q.stop()
+        q.recentProgress.toSeq.flatMap(p => Option(p.stateOperators).toSeq.flatten)
+          .map(_.numShufflePartitions.toInt)
+      }
+
+      Seq(0, 1).foreach(land)
+      assert(run().toSet == Set(8), "first run must build its state under the session's 8")
+      spark.conf.set(partsKey, "4")
+      Seq(2, 3).foreach(land)
+      val resumed = run()
+      assert(resumed.nonEmpty && resumed.toSet == Set(8),
+        s"restart must keep the checkpoint's 8 state partitions, saw ${resumed.distinct}")
+
+      val landed = spark.read.format("jdbc")
+        .option("url", url).option("dbtable", """"ckparts"""").load()
+        .select("key", "ts", "text")
+      val expected = (0 until 4).map(rows).reduce(_ union _).distinct()
+      val n = landed.count()
+      assert(n == 4 * distinct, s"lost/duplicated rows: $n")
+      assert(landed.select("key").distinct().count() == 4 * distinct, "duplicate keys landed")
+      assert(landed.exceptAll(expected).isEmpty && expected.exceptAll(landed).isEmpty,
+        "landed set differs from the expected rows")
+    } finally {
+      // restore, not unset: unset would drop to Spark's 200, not the builder's 4
+      spark.conf.set(partsKey, sessionParts)
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("kafka source spec constructs exactly the reference consumer's reader options") {

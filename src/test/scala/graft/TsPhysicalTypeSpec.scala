@@ -29,9 +29,7 @@ class TsPhysicalTypeSpec extends AnyFunSuite with BeforeAndAfterAll {
   val probes = Seq("q24_event_tumbling", "q97_rolling_range")
 
   override def beforeAll(): Unit = {
-    spark = GraftSession.builder("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .getOrCreate()
+    spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     base = Files.createTempDirectory("graft_ts_phys")
     val canonical = Tables(spark, srcDir, "events") // ts already bigint nanos

@@ -33,8 +33,7 @@ class VerifyHardeningSpec extends AnyFunSuite
     val dir = new java.io.File(s"$out/$probe")
     assert(dir.isDirectory, "failed query must still dump a parquet dir")
     // …and that entry is a loud one-row error marker, not plausible data
-    val spark = GraftSession.builder("local[2]")
-      .config("spark.sql.shuffle.partitions", "2").getOrCreate()
+    val spark = GraftSession.builder("local[2]").getOrCreate()
     try {
       spark.sparkContext.setLogLevel("ERROR")
       val rows = spark.read.parquet(dir.toString).collect()
