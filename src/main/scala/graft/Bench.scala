@@ -131,23 +131,8 @@ object Bench {
     // comparable), so both fences read/write only at the canonical dir
     // and off-SF runs record regression_checked:false.
     val ratchetSf = sfDir.stripSuffix("/").endsWith("sf0.1")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // measure the engine as shipped: GraftSession always carries the
-      // extensions (graft_cosine/java_string_hash + the HOF-cosine fusion
-      // rule), so the bench session must too
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // size the generated-class cache to the query surface: the 100-entry
-      // default evicts every lane's codegen between the cold and warm pass
-      // (149 lanes run in between), so warm-pass numbers measured compile +
-      // fresh-class JIT, not steady-state plan cost — see GraftSession doc
-      .config("spark.sql.codegen.cache.maxEntries", GraftSession.codegenCacheEntries.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // measure the engine as shipped: the bench session is the builder's
+    val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     // Artifact-vs-session reconciliation (r11 verdict #3): the recorded

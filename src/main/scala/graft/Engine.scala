@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
+import graft.sources.{NioLocalFileSystem, NioLocalFs}
+
 /** Session factory for the graft engine.
   *
   * Config rationale (SURVEY.md §7, FIXTURES.md §B):
@@ -16,6 +18,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    commit cost on every micro-batch — ≈180 ms per RocksDB store on a
   *    4-core VM, rows or no rows — so 32 stores on 4 cores made
   *    `dedupByContent`'s commit the dominant layer of a drain batch.
+  *  - `spark.hadoop.fs.file.impl` / `spark.hadoop.fs.AbstractFileSystem.file.impl`
+  *    = [[graft.sources.NioLocalFileSystem]] / [[graft.sources.NioLocalFs]]:
+  *    without `libhadoop`, stock Hadoop forks `chmod` after every `create`
+  *    and `mkdirs` and `readlink` for both sides of every rename's status,
+  *    and every local checkpoint write goes through it (offset and commit
+  *    logs, file-source log, RocksDB snapshot upload, parquet landing). One
+  *    200-byte `CheckpointFileManager.createAtomic` took 61–103 ms through
+  *    `FileContext` on a 4-core VM whose `fsync` takes 0.2 ms, and one
+  *    drain run launched 880 processes. The wrappers make both calls with
+  *    `java.nio`; they fall back to stock Hadoop when its native library is
+  *    loaded, for a sticky-bit mode and for a symlink.
   *  - AQE on: runtime join-strategy switching + skew-join splitting + shuffle
   *    partition coalescing are the 100 TB safety net.
   *  - `spark.sql.legacy.parquet.nanosAsLong=true`: driver test data has
@@ -87,6 +100,8 @@ object GraftSession {
       .config("spark.sql.codegen.cache.maxEntries", codegenCacheEntries.toString)
       .config("spark.sql.analyzer.maxIterations", "400") // s168's linear CTE chain (see tune())
       .config("spark.ui.enabled", "false")
+      .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
 
   def local(): SparkSession = {
     val s = builder().getOrCreate()
@@ -95,7 +110,7 @@ object GraftSession {
   }
 
   /** Apply graft-required runtime confs to an externally built session
-    * (Verify/Bench build their own; the driver may too). All of these are
+    * (one not made by `builder`). All of these are
     * dynamic SQLConfs, safe to set post-construction. */
   def tune(s: SparkSession): SparkSession = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

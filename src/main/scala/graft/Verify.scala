@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare.
@@ -22,27 +21,11 @@ object Verify {
     val only: Option[Set[String]] =
       if (args.length > 2 && args(2).nonEmpty) Some(args(2).split(',').toSet) else None
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      // the s48/s87 SQL-text twins call the graft_cosine extension function;
-      // without the extensions they fail UNRESOLVED_ROUTINE at plan time and
-      // silently VANISH from the correctness surface (no parquet dir → no
-      // driver row — r6 shipped 222 entries where 224 were registered)
-      .withExtensions(new GraftExtensions)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // the driver has shipped events.ts as INT64 TIMESTAMP(NANOS) (pre-r7;
-      // this legacy flag reads it as bigint) and as TIMESTAMP(MICROS)/NTZ
-      // (since the r7 regen). Correctness across both physical spellings is
-      // owed to Tables.normalizeTs (Engine.scala) folding every variant to
-      // the epoch-nanos-bigint contract at load; the flag is only the
-      // legacy-file fallback. TsPhysicalTypeSpec pins all three spellings.
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // surface-sized codegen-class cache (engine default — GraftSession doc)
-      .config("spark.sql.codegen.cache.maxEntries", GraftSession.codegenCacheEntries.toString)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    // the builder's session: the graft_cosine extension the s48/s87 SQL
+    // twins call (without it they fail UNRESOLVED_ROUTINE and vanish from
+    // the correctness surface) and the legacy nanos flag that
+    // Tables.normalizeTs falls back on (TsPhysicalTypeSpec)
+    val spark = GraftSession.builder(s"local[$cpus]").getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     // Fixture-invariant guard (r11 ADVICE #3): the bit-exact ANN oracle
