@@ -20,15 +20,9 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs}
   *    `dedupByContent`'s commit the dominant layer of a drain batch.
   *  - `spark.hadoop.fs.file.impl` / `spark.hadoop.fs.AbstractFileSystem.file.impl`
   *    = [[graft.sources.NioLocalFileSystem]] / [[graft.sources.NioLocalFs]]:
-  *    without `libhadoop`, stock Hadoop forks `chmod` after every `create`
-  *    and `mkdirs` and `readlink` for both sides of every rename's status,
-  *    and every local checkpoint write goes through it (offset and commit
-  *    logs, file-source log, RocksDB snapshot upload, parquet landing). One
-  *    200-byte `CheckpointFileManager.createAtomic` took 61–103 ms through
-  *    `FileContext` on a 4-core VM whose `fsync` takes 0.2 ms, and one
-  *    drain run launched 880 processes. The wrappers make both calls with
-  *    `java.nio`; they fall back to stock Hadoop when its native library is
-  *    loaded, for a sticky-bit mode and for a symlink.
+  *    stock Hadoop launches a process per local checkpoint file (one drain
+  *    run launched 880 on a 4-core VM; one 200-byte `createAtomic` took
+  *    61–103 ms); see [[graft.sources.NioRawLocalFileSystem]].
   *  - AQE on: runtime join-strategy switching + skew-join splitting + shuffle
   *    partition coalescing are the 100 TB safety net.
   *  - `spark.sql.legacy.parquet.nanosAsLong=true`: driver test data has

@@ -8,25 +8,28 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
-import org.apache.hadoop.io.nativeio.NativeIO
 
 /** Hadoop's local filesystem without a process launch per file.
   *
   * Without `libhadoop`, stock `RawLocalFileSystem` forks `chmod` from
-  * `setPermission` (after every `create` and `mkdirs`) and `readlink`
-  * from `getFileLinkStatus` (both sides of every `FileContext` rename).
-  * Both are plain syscalls through `java.nio`. Stock Hadoop still runs
-  * when its native library is loaded, for a sticky-bit mode (no
-  * `PosixFilePermission` spells it) and for a symlink. Hadoop applies the
-  * umask before `setPermission`, so the mode bits are the same. */
+  * `setPermission` (after every `create` and `mkdirs`), and with or
+  * without it `readlink` from `getFileLinkStatus` (both sides of every
+  * `FileContext` rename). Both are plain syscalls through `java.nio`.
+  * Stock Hadoop still runs for a sticky-bit mode (no `PosixFilePermission`
+  * spells it) and for a symlink. Hadoop applies the umask before
+  * `setPermission`, so the mode bits are the same. */
 class NioRawLocalFileSystem extends RawLocalFileSystem {
   override def setPermission(p: Path, perm: FsPermission): Unit =
-    if (NativeIO.isAvailable() || perm.getStickyBit) super.setPermission(p, perm)
-    else Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(perm.toString))
+    if (perm.getStickyBit) super.setPermission(p, perm)
+    else {
+      // from the mode bits: `FsCreateModes.toString` is not `rwxrwxrwx`
+      val rwx = Seq(perm.getUserAction, perm.getGroupAction, perm.getOtherAction).map(_.SYMBOL).mkString
+      Files.setPosixFilePermissions(pathToFile(p).toPath, PosixFilePermissions.fromString(rwx))
+    }
 
   /** A missing path still throws `FileNotFoundException` from `getFileStatus`. */
   override def getFileLinkStatus(f: Path): FileStatus =
-    if (NativeIO.isAvailable() || Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
+    if (Files.isSymbolicLink(pathToFile(f).toPath)) super.getFileLinkStatus(f)
     else getFileStatus(f)
 }
 

@@ -5,10 +5,12 @@ import java.net.URI
 import java.nio.charset.StandardCharsets.UTF_8
 import java.nio.file.{Files, Path => JPath}
 import java.nio.file.attribute.PosixFilePermissions
+import java.util.EnumSet
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Path, RawLocalFileSystem}
-import org.apache.hadoop.fs.permission.FsPermission
+import org.apache.hadoop.fs.{CreateFlag, FileContext, FileStatus, FileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.Options.CreateOpts
+import org.apache.hadoop.fs.permission.{FsCreateModes, FsPermission}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.checkpointing.CheckpointFileManager
 import org.scalatest.BeforeAndAfterAll
@@ -57,6 +59,26 @@ class NioLocalFsSpec extends AnyFunSuite with BeforeAndAfterAll {
         assert(perms(dir.resolve("nio" + suffix)) == perms(dir.resolve("stock" + suffix)), suffix)
       assert(perms(dir.resolve("nio.bin")) == "rw-r-----")
       assert(perms(dir.resolve("nio.d")) == "rwxr-x---")
+    }
+  }
+
+  test("FileContext mkdir, create and a masked/unmasked setPermission match stock") {
+    withTempDir { dir =>
+      val fc = FileContext.getFileContext(spark.sparkContext.hadoopConfiguration)
+      val d = new Path(dir.resolve("d").toString)
+      fc.mkdir(d, octal("750"), false)
+      val f = new Path(d, "f")
+      fc.create(f, EnumSet.of(CreateFlag.CREATE), CreateOpts.perms(octal("640"))).close()
+      assert(perms(dir.resolve("d")) == "rwxr-x---")
+      assert(perms(dir.resolve("d/f")) == "rw-r-----")
+      // `FileContext` hands an `FsCreateModes` through unchanged; its toString is not rwx
+      val masked = FsCreateModes.create(octal("600"), octal("644"))
+      fc.setPermission(f, masked)
+      val s = dir.resolve("stock")
+      Files.createFile(s)
+      stock.setPermission(new Path(s.toString), masked)
+      assert(perms(dir.resolve("d/f")) == perms(s))
+      assert(perms(s) == "rw-------")
     }
   }
 
