@@ -23,6 +23,10 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs}
   *    stock Hadoop launches a process per local checkpoint file (one drain
   *    run launched 880 on a 4-core VM; one 200-byte `createAtomic` took
   *    61–103 ms); see [[graft.sources.NioRawLocalFileSystem]].
+  *  - `spark.sql.streaming.stateStore.providerClass` = RocksDB: every
+  *    arbitrary-state operator in [[graft.streaming.StreamOps]] runs on
+  *    `transformWithState`, which requires it. A checkpoint keeps the
+  *    provider it was created with (Spark records it in the offset log).
   *  - AQE on: runtime join-strategy switching + skew-join splitting + shuffle
   *    partition coalescing are the 100 TB safety net.
   *  - `spark.sql.legacy.parquet.nanosAsLong=true`: driver test data has
@@ -96,6 +100,8 @@ object GraftSession {
       .config("spark.ui.enabled", "false")
       .config("spark.hadoop.fs.file.impl", classOf[NioLocalFileSystem].getName)
       .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[NioLocalFs].getName)
+      .config("spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   def local(): SparkSession = {
     val s = builder().getOrCreate()

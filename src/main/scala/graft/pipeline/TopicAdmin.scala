@@ -56,13 +56,6 @@ object TopicAdmin {
     }
     topics
   }
-
-  /** Convenience: lifecycle parameters straight from a reference-keyed
-    * [[PipelineConfig]] (kafka.topic.partition.count /
-    * kafka.topic.replica-factor.count — 01-infra config.properties:7-8). */
-  def recreateFromConfig(admin: TopicAdmin, topics: Seq[String],
-                         cfg: PipelineConfig): Seq[String] =
-    recreate(admin, topics, cfg.topicPartitionCount, cfg.topicReplicaFactor)
 }
 
 /** In-sandbox [[TopicAdmin]]: topics as tables of a Spark catalog database

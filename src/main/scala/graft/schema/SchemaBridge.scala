@@ -118,9 +118,4 @@ object SchemaBridge {
     val cols = ss.fields.map { case (f, t) => s"`$f` ${DdlTypes(t)}" }.mkString(", ")
     s"CREATE TABLE IF NOT EXISTS $database.`${ss.name}` ($cols) USING parquet"
   }
-
-  /** Dump Avro schema JSONs, the analogue of the reference's
-    * schema_avro.json artifact (DataPipeline.java:66-75). */
-  def dumpAvroJson(schemas: Seq[Schema]): String =
-    schemas.map(_.toString).mkString("[", ",", "]")
 }

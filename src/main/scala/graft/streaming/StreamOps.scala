@@ -1,8 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
 
 /** Event-time streaming operators (SURVEY §2.3.9) — the watermark/window/
   * session/stateful surface the north star requires on top of the
@@ -14,8 +14,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * downstream). Each is a thin declarative wrapper over Structured
   * Streaming built-ins — state lives in the checkpointed state store, which
   * scales horizontally with shuffle partitions (state is hash-partitioned
-  * by group key; at 100 TB the same code runs with RocksDB state store
-  * enabled via conf, no code change).
+  * by group key). The arbitrary-state operators run on `transformWithState`,
+  * which requires the RocksDB state store provider; [[graft.GraftSession.builder]]
+  * sets it, so a builder session runs every operator here as is.
   */
 object StreamOps {
 
@@ -160,28 +161,12 @@ object StreamOps {
     * batch-boundary placement never changes a verdict.
     *
     * State is bounded by construction ([[SemClusterState]]), needs no
-    * timeout to stay bounded, and lives in the checkpointed store — on
-    * RocksDB at scale like every stateful op here. Clusters are the state
-    * keys, so the pair stage parallelizes across the shuffle exactly like
-    * the batch self-join. */
+    * timeout to stay bounded, and lives in the checkpointed RocksDB store
+    * (a `transformWithState` named value per cluster). Clusters are the
+    * state keys, so the pair stage parallelizes across the shuffle exactly
+    * like the batch self-join. */
   def semDedupStream(ds: Dataset[EmbRecord], centroids: Seq[(Long, Array[Double])],
-                     cap: Int, tau: Double): Dataset[SemVerdict] =
-    semDedupStreamImpl(ds, centroids, cap, tau, useTws = false)
-
-  /** [[semDedupStream]] on `transformWithState` — the fourth and last
-    * stateful operator ported to the successor API (r17; after the r16
-    * trilogy), so EVERY flatMapGroupsWithState op in the library now has
-    * a side-by-side Tws spelling and the migration recipe covers the
-    * bounded-member-cache state shape too. Semantics identical —
-    * StreamingSpec pins tws ≡ legacy ≡ batch on the fixture corpus
-    * across micro-batch splits; RocksDB provider required by the API. */
-  def semDedupStreamTws(ds: Dataset[EmbRecord], centroids: Seq[(Long, Array[Double])],
-                        cap: Int, tau: Double): Dataset[SemVerdict] =
-    semDedupStreamImpl(ds, centroids, cap, tau, useTws = true)
-
-  private def semDedupStreamImpl(ds: Dataset[EmbRecord],
-      centroids: Seq[(Long, Array[Double])], cap: Int, tau: Double,
-      useTws: Boolean): Dataset[SemVerdict] = {
+                     cap: Int, tau: Double): Dataset[SemVerdict] = {
     import ds.sparkSession.implicits._
     val cents = centroids.sortBy(_._1)
     def cos(a: Array[Double], b: Array[Double]): Double = {
@@ -211,28 +196,36 @@ object StreamOps {
       if (x.isNaN) x
       else java.math.BigDecimal.valueOf(x).setScale(4, java.math.RoundingMode.HALF_UP).doubleValue()
     def geTau(sim: Double, tau: Double): Boolean = sim.isNaN || sim >= tau
-    // ONE fold shared verbatim by both API spellings: parity between the
-    // legacy and Tws lanes is then structural, not maintained by hand
-    def foldGroup(cluster: Long, rows: Iterator[(Long, Long, Seq[Double])],
-                  prev: SemClusterState): (SemClusterState, Seq[SemVerdict]) = {
-      var ids = prev.ids.toVector
-      var vecs = prev.vecs.map(_.toArray).toVector
-      val out = rows.toSeq.sortBy(_._1).map { case (vid, _, vn) =>
-        if (ids.size < cap) {
-          var dupOf = -1L
-          var i = 0
-          while (i < ids.size) {
-            if (geTau(r4(dotp(vn, vecs(i))), tau) && (dupOf == -1L || ids(i) < dupOf))
-              dupOf = ids(i)
-            i += 1
-          }
-          ids :+= vid; vecs :+= vn.toArray
-          SemVerdict(vid, cluster, dupOf, dupOf != -1L)
-        } else SemVerdict(vid, cluster, -1L, is_dup = false)
+    val proc = new StatefulProcessor[Long, (Long, Long, Seq[Double]), SemVerdict] {
+      @transient private var st: ValueState[SemClusterState] = _
+      override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
+        st = getHandle.getValueState[SemClusterState]("members",
+          Encoders.product[SemClusterState], TTLConfig.NONE)
+      override def handleInputRows(cluster: Long,
+          rows: Iterator[(Long, Long, Seq[Double])],
+          tv: TimerValues): Iterator[SemVerdict] = {
+        val prev = if (st.exists()) st.get()
+          else SemClusterState(Vector.empty, Vector.empty)
+        var ids = prev.ids.toVector
+        var vecs = prev.vecs.map(_.toArray).toVector
+        val out = rows.toSeq.sortBy(_._1).map { case (vid, _, vn) =>
+          if (ids.size < cap) {
+            var dupOf = -1L
+            var i = 0
+            while (i < ids.size) {
+              if (geTau(r4(dotp(vn, vecs(i))), tau) && (dupOf == -1L || ids(i) < dupOf))
+                dupOf = ids(i)
+              i += 1
+            }
+            ids :+= vid; vecs :+= vn.toArray
+            SemVerdict(vid, cluster, dupOf, dupOf != -1L)
+          } else SemVerdict(vid, cluster, -1L, is_dup = false)
+        }
+        st.update(SemClusterState(ids, vecs.map(_.toSeq)))
+        out.iterator
       }
-      (SemClusterState(ids, vecs.map(_.toSeq)), out)
     }
-    val grouped = ds.map { r =>
+    ds.map { r =>
       val v = r.embedding.map(_.toDouble).toArray
       var bid = -1L; var bs = Double.NegativeInfinity
       cents.foreach { case (cid, cv) =>
@@ -243,35 +236,7 @@ object StreamOps {
       val nrm = math.sqrt(n2)
       (r.vec_id, bid, v.map(_ / nrm).toSeq)
     }.groupByKey(_._2)
-    if (useTws) {
-      import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-      val proc = new StatefulProcessor[Long, (Long, Long, Seq[Double]), SemVerdict] {
-        @transient private var st: ValueState[SemClusterState] = _
-        override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-          st = getHandle.getValueState[SemClusterState]("members",
-            org.apache.spark.sql.Encoders.product[SemClusterState], TTLConfig.NONE)
-        override def handleInputRows(cluster: Long,
-            rows: Iterator[(Long, Long, Seq[Double])],
-            tv: TimerValues): Iterator[SemVerdict] = {
-          val prev = if (st.exists()) st.get()
-            else SemClusterState(Vector.empty, Vector.empty)
-          val (next, out) = foldGroup(cluster, rows, prev)
-          st.update(next)
-          out.iterator
-        }
-      }
-      grouped.transformWithState(proc, TimeMode.None(), OutputMode.Append())
-    } else {
-      grouped.flatMapGroupsWithState[SemClusterState, SemVerdict](
-        OutputMode.Append(), GroupStateTimeout.NoTimeout()) {
-        (cluster: Long, rows: Iterator[(Long, Long, Seq[Double])],
-         state: GroupState[SemClusterState]) =>
-          val prev = state.getOption.getOrElse(SemClusterState(Vector.empty, Vector.empty))
-          val (next, out) = foldGroup(cluster, rows, prev)
-          state.update(next)
-          out.iterator
-      }
-    }
+      .transformWithState(proc, TimeMode.None(), OutputMode.Append())
   }
 
   /** Streaming MinHash near-dup ingest — the q50 twin (r16 verdict #3),
@@ -358,7 +323,6 @@ object StreamOps {
   private def neardupPairs(ds: Dataset[TimedDocRecord], threshold: Double,
       bucketCap: Int): Dataset[NearDupPairT] = {
     import ds.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, ValueState}
     val k = graft.operators.Dedup.ShingleWords
     val nBands = graft.operators.Dedup.MinHashK / graft.operators.Dedup.BandRows
     val banded = ds.flatMap { d =>
@@ -387,8 +351,7 @@ object StreamOps {
       @transient private var st: ValueState[BucketMembers] = _
       override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
         st = getHandle.getValueState[BucketMembers]("members",
-          org.apache.spark.sql.Encoders.product[BucketMembers],
-          org.apache.spark.sql.streaming.TTLConfig.NONE)
+          Encoders.product[BucketMembers], TTLConfig.NONE)
       override def handleInputRows(key: (Int, Long, Long), rows: Iterator[BandRecord],
                                    tv: TimerValues): Iterator[NearDupPairT] = {
         val prev =
@@ -434,77 +397,42 @@ object StreamOps {
       .transformWithState(proc, TimeMode.None(), OutputMode.Append())
   }
 
+  /** `ttl` → the state variable's TTL and the query's time mode. Spark
+    * accepts a state TTL only in processing-time mode (a TTLConfig with
+    * TimeMode.None fails at query start — r16 ADVICE #1), so the mode
+    * follows the option; no TTL keeps the timer-free TimeMode.None plan. */
+  private def ttlMode(ttl: Option[java.time.Duration]): (TTLConfig, TimeMode) =
+    ttl match {
+      case Some(d) => (TTLConfig(d), TimeMode.ProcessingTime())
+      case None => (TTLConfig.NONE, TimeMode.None())
+    }
+
   /** Per-key running aggregate via explicit state — the Spark-native shape
     * of the reference's in-memory offset map (AvroConsumer.java:168: state
     * keyed by partition, advanced per record, externalized periodically).
-    * Emits (key, runningCount, runningSum) every update.
+    * Emits (key, runningCount, runningSum) every update. State is one
+    * `transformWithState` named value per key on the RocksDB store.
     *
-    * @param idleTimeout e.g. Some("1 hour"): state for keys idle that long
-    *   is dropped. At 100 TB the key space is unbounded — without a TTL the
-    *   state store grows forever; with it, state size tracks the ACTIVE key
-    *   set. None keeps reference semantics (offsets never expire). */
+    * @param ttl e.g. Some(Duration.ofHours(1)): state for keys idle that
+    *   long is dropped. At 100 TB the key space is unbounded — without a TTL
+    *   the state store grows forever; with it, state size tracks the ACTIVE
+    *   key set. None keeps reference semantics (offsets never expire).
+    *   A TTL switches the query to processing-time mode, under which the
+    *   engine keeps scheduling timer micro-batches to expire state: run a
+    *   TTL'd query with a real `Trigger.ProcessingTime(interval)` (a
+    *   default/0 ms trigger busy-loops empty batches, and
+    *   `processAllAvailable` never settles — measured in StreamingSpec's
+    *   TTL test, which polls instead). The same holds for every `ttl` in
+    *   this object. */
   def runningPerKey(ds: Dataset[KeyedEvent],
-                    idleTimeout: Option[String] = None): Dataset[KeyRunning] = {
+                    ttl: Option[java.time.Duration] = None): Dataset[KeyRunning] = {
     import ds.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[KeyRunning, KeyRunning](
-        OutputMode.Update(), timeoutConf) {
-        (key: String, events: Iterator[KeyedEvent], state: GroupState[KeyRunning]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val prev = state.getOption.getOrElse(KeyRunning(key, 0L, 0.0))
-            var cnt = prev.count
-            var sum = prev.sum
-            events.foreach { e => cnt += 1; sum += e.value }
-            val next = KeyRunning(key, cnt, sum)
-            state.update(next)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            Iterator.single(next)
-          }
-      }
-  }
-
-  /** Running per-key count/sum on Spark 4's `transformWithState` — the NEW
-    * arbitrary-state API (`StatefulProcessor` + named typed state variables
-    * + per-state TTL), the successor to flatMapGroupsWithState. Semantics
-    * are IDENTICAL to [[runningPerKey]], and StreamingSpec cross-checks the
-    * two APIs emit the same rows over the same stream — so a user migrating
-    * state code to the new API has both spellings here, verified against
-    * each other.
-    *
-    * Scale notes: requires the RocksDB state store provider (the API's own
-    * contract, and the 100 TB conf anyway — state is hash-partitioned by
-    * key and spills off-heap); `ttl` bounds state to the recently-active
-    * key set exactly like runningPerKey's idle timeout — on an unbounded
-    * key space, no TTL means unbounded state.
-    *
-    * A non-empty `ttl` switches the query to processing-time mode (the
-    * API's requirement for TTL), under which the engine keeps scheduling
-    * timer micro-batches to expire state — run TTL'd queries with a real
-    * `Trigger.ProcessingTime(interval)` (a default/0 ms trigger busy-loops
-    * empty batches, and `processAllAvailable` never settles — measured in
-    * StreamingSpec's TTL test, which polls instead). Applies to all three
-    * Tws ops. */
-  def runningPerKeyTws(ds: Dataset[KeyedEvent],
-                       ttl: Option[java.time.Duration] = None): Dataset[KeyRunning] = {
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val ttlConf = ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE)
-    // state TTL is only legal under processing-time mode (Spark rejects a
-    // TTLConfig with TimeMode.None at query start — r16 ADVICE #1), so the
-    // time mode follows the ttl option; TimeMode.None when no TTL keeps the
-    // no-timer plan for the common case
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
+    val (ttlConf, timeMode) = ttlMode(ttl)
     val proc = new StatefulProcessor[String, KeyedEvent, KeyRunning] {
       @transient private var st: ValueState[KeyRunning] = _
       override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
         st = getHandle.getValueState[KeyRunning]("running",
-          org.apache.spark.sql.Encoders.product[KeyRunning], ttlConf)
+          Encoders.product[KeyRunning], ttlConf)
       override def handleInputRows(key: String, rows: Iterator[KeyedEvent],
                                    tv: TimerValues): Iterator[KeyRunning] = {
         val prev = if (st.exists()) st.get() else KeyRunning(key, 0L, 0.0)
@@ -526,65 +454,26 @@ object StreamOps {
     * Where the batch op selects survivors by deterministic hash rank
     * (order-independent, needs the whole group), a stream must decide at
     * arrival — so the streaming contract is first-k-by-arrival, the
-    * admission-control shape of a per-source ingest throttle. Use an idle
-    * timeout to bound state to the active key set. */
-  def admitPerKey(ds: Dataset[KeyedEvent], k: Long,
-                  idleTimeout: Option[String] = None): Dataset[KeyedEvent] = {
-    import ds.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(_.key)
-      .flatMapGroupsWithState[Long, KeyedEvent](
-        OutputMode.Append(), timeoutConf) {
-        (key: String, events: Iterator[KeyedEvent], state: GroupState[Long]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            val admitted = state.getOption.getOrElse(0L)
-            // within a batch, admit in event-time order (ties by value) so
-            // the micro-batch boundary doesn't make admission arbitrary
-            // clamp before the Int conversion: a Long cap > Int.MaxValue must
-            // saturate, not wrap into a small/negative take()
-            val room = math.min(math.max(0L, k - admitted), Int.MaxValue.toLong)
-            val take = events.toSeq.sortBy(e => (e.ts.getTime, e.value))
-              .take(room.toInt)
-            state.update(admitted + take.size)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            take.iterator
-          }
-      }
-  }
-
-  /** [[admitPerKey]] on Spark 4's `transformWithState` — the successor
-    * arbitrary-state API, ported per the r15 directive with the SIMPLEST
-    * state shape (one long per key) so the two spellings sit side by side
-    * as the migration recipe next to [[runningPerKeyTws]]'s aggregate
-    * shape. Semantics are IDENTICAL to admitPerKey: admit the first `k`
-    * per key by arrival, intra-batch (event-time, value) order —
-    * StreamingSpec pins old ≡ new across the same micro-batch splits.
+    * admission-control shape of a per-source ingest throttle. Within a
+    * micro-batch, events are admitted in (event time, value) order.
     *
-    * `ttl` plays idleTimeout's role: the admitted-count state for keys
-    * idle past the TTL is dropped (state tracks the ACTIVE key set on an
-    * unbounded key space — the 100 TB requirement). Requires the RocksDB
-    * state store provider (the API's own contract). */
-  def admitPerKeyTws(ds: Dataset[KeyedEvent], k: Long,
-                     ttl: Option[java.time.Duration] = None): Dataset[KeyedEvent] = {
+    * `ttl` drops the admitted count of keys idle that long, bounding state
+    * to the active key set (processing-time mode, see [[runningPerKey]]). */
+  def admitPerKey(ds: Dataset[KeyedEvent], k: Long,
+                  ttl: Option[java.time.Duration] = None): Dataset[KeyedEvent] = {
     import ds.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val ttlConf = ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE)
-    // TTL requires processing-time mode (see runningPerKeyTws)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
+    val (ttlConf, timeMode) = ttlMode(ttl)
     val proc = new StatefulProcessor[String, KeyedEvent, KeyedEvent] {
       @transient private var st: ValueState[Long] = _
       override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-        st = getHandle.getValueState[Long]("admitted",
-          org.apache.spark.sql.Encoders.scalaLong, ttlConf)
+        st = getHandle.getValueState[Long]("admitted", Encoders.scalaLong, ttlConf)
       override def handleInputRows(key: String, rows: Iterator[KeyedEvent],
                                    tv: TimerValues): Iterator[KeyedEvent] = {
         val admitted = if (st.exists()) st.get() else 0L
-        // same clamp + intra-batch order contract as admitPerKey
+        // within a batch, admit in event-time order (ties by value) so
+        // the micro-batch boundary doesn't make admission arbitrary;
+        // clamp before the Int conversion: a Long cap > Int.MaxValue must
+        // saturate, not wrap into a small/negative take()
         val room = math.min(math.max(0L, k - admitted), Int.MaxValue.toLong)
         val take = rows.toSeq.sortBy(e => (e.ts.getTime, e.value))
           .take(room.toInt)
@@ -607,63 +496,18 @@ object StreamOps {
     * intra-batch disorder is harmless; an event arriving in a LATER batch
     * with an earlier timestamp cannot retroactively lower a stage (the
     * stage timestamps only ever fill forward) — the same trade every
-    * at-most-once-pass streaming funnel makes. Use an idle timeout in
-    * production: without one, one small fixed-size state row per user ever
-    * seen. */
+    * at-most-once-pass streaming funnel makes. Use a `ttl` in production
+    * (processing-time mode, see [[runningPerKey]]): without one, one small
+    * fixed-size state row per user ever seen. */
   def funnelPerUser(ds: Dataset[FunnelEvent],
-                    idleTimeout: Option[String] = None): Dataset[FunnelProgress] = {
+                    ttl: Option[java.time.Duration] = None): Dataset[FunnelProgress] = {
     import ds.sparkSession.implicits._
-    val timeoutConf =
-      if (idleTimeout.isDefined) GroupStateTimeout.ProcessingTimeTimeout()
-      else GroupStateTimeout.NoTimeout()
-    ds.groupByKey(_.user_id)
-      .flatMapGroupsWithState[FunnelProgress, FunnelProgress](
-        OutputMode.Update(), timeoutConf) {
-        (uid: Long, events: Iterator[FunnelEvent], state: GroupState[FunnelProgress]) =>
-          if (state.hasTimedOut) {
-            state.remove()
-            Iterator.empty
-          } else {
-            var st = state.getOption.getOrElse(FunnelProgress(uid, -1L, -1L, -1L))
-            events.toSeq.sortBy(e => (e.tUs, e.etype)).foreach { e =>
-              e.etype match {
-                case "view" if st.vt < 0 => st = st.copy(vt = e.tUs)
-                case "click" if st.vt >= 0 && st.ct < 0 && e.tUs > st.vt =>
-                  st = st.copy(ct = e.tUs)
-                case "purchase" if st.ct >= 0 && st.pt < 0 && e.tUs > st.ct =>
-                  st = st.copy(pt = e.tUs)
-                case _ => // stage already reached, out of order, or other type
-              }
-            }
-            state.update(st)
-            idleTimeout.foreach(state.setTimeoutDuration)
-            Iterator.single(st)
-          }
-      }
-  }
-
-  /** [[funnelPerUser]] on `transformWithState` — the third and last
-    * stateful op ported to the successor API (r16; after
-    * [[runningPerKeyTws]]'s aggregate and [[admitPerKeyTws]]'s counter,
-    * this is the STATE-MACHINE shape), so every
-    * flatMapGroupsWithState operator in the library has a side-by-side
-    * migration spelling. Semantics identical to funnelPerUser — same
-    * intra-batch (ts, type) ordering, same fill-forward stage machine —
-    * StreamingSpec pins old ≡ new on the funnel golden fixture across
-    * micro-batch splits. `ttl` bounds state to the recently-active user
-    * set; RocksDB provider required by the API. */
-  def funnelPerUserTws(ds: Dataset[FunnelEvent],
-                       ttl: Option[java.time.Duration] = None): Dataset[FunnelProgress] = {
-    import ds.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
-    val ttlConf = ttl.map(TTLConfig.apply).getOrElse(TTLConfig.NONE)
-    // TTL requires processing-time mode (see runningPerKeyTws)
-    val timeMode = if (ttl.isDefined) TimeMode.ProcessingTime() else TimeMode.None()
+    val (ttlConf, timeMode) = ttlMode(ttl)
     val proc = new StatefulProcessor[Long, FunnelEvent, FunnelProgress] {
       @transient private var st: ValueState[FunnelProgress] = _
       override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
         st = getHandle.getValueState[FunnelProgress]("funnel",
-          org.apache.spark.sql.Encoders.product[FunnelProgress], ttlConf)
+          Encoders.product[FunnelProgress], ttlConf)
       override def handleInputRows(uid: Long, rows: Iterator[FunnelEvent],
                                    tv: TimerValues): Iterator[FunnelProgress] = {
         var cur = if (st.exists()) st.get() else FunnelProgress(uid, -1L, -1L, -1L)
@@ -754,7 +598,6 @@ object StreamOps {
   def exactSubstrStream(ds: Dataset[DocRecord],
       k: Int = graft.operators.Dedup.ExactSubstrK): Dataset[ExactSubstrOcc] = {
     import ds.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{StatefulProcessor, TimeMode, TimerValues, ValueState}
     val grams = ds.flatMap { d =>
       val words =
         if (d.text == null) Array.empty[String] else d.text.trim.split("\\s+")
@@ -773,8 +616,7 @@ object StreamOps {
       @transient private var st: ValueState[GramFirst] = _
       override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
         st = getHandle.getValueState[GramFirst]("first",
-          org.apache.spark.sql.Encoders.product[GramFirst],
-          org.apache.spark.sql.streaming.TTLConfig.NONE)
+          Encoders.product[GramFirst], TTLConfig.NONE)
       override def handleInputRows(key: Long, rows: Iterator[GramOcc],
                                    tv: TimerValues): Iterator[ExactSubstrOcc] = {
         // deterministic in-batch order; the emitted SET is order-invariant
@@ -825,7 +667,6 @@ object StreamOps {
   def exactSubstrStreamWithinWatermark(ds: Dataset[TimedDocRecord], watermark: String,
       k: Int = graft.operators.Dedup.ExactSubstrK): Dataset[ExactSubstrOcc] = {
     import ds.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{ExpiredTimerInfo, StatefulProcessor, TimeMode, TimerValues, TTLConfig, ValueState}
     val grams = ds.flatMap { d =>
       val words =
         if (d.text == null) Array.empty[String] else d.text.trim.split("\\s+")
@@ -843,7 +684,7 @@ object StreamOps {
       @transient private var st: ValueState[GramFirstT] = _
       override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
         st = getHandle.getValueState[GramFirstT]("firstT",
-          org.apache.spark.sql.Encoders.product[GramFirstT], TTLConfig.NONE)
+          Encoders.product[GramFirstT], TTLConfig.NONE)
       override def handleInputRows(key: Long, rows: Iterator[TimedGramOcc],
                                    tv: TimerValues): Iterator[ExactSubstrOcc] = {
         // same deterministic order + emit-once contract as the base twin

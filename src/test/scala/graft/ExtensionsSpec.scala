@@ -22,14 +22,23 @@ class ExtensionsSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("builder sizes shuffle partitions to local[N]; a later .config wins") {
     val key = "spark.sql.shuffle.partitions"
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val rocks = "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
     assert(spark.conf.get(key) == "4")
+    assert(spark.conf.get(provider) == rocks)
     // getOrCreate hands back this suite's session with the builder's
     // runtime confs applied, so no second session is built
     try {
-      val s = GraftSession.builder("local[4]").config(key, "7").getOrCreate()
+      val s = GraftSession.builder("local[4]").config(key, "7")
+        .config(provider, hdfs).getOrCreate()
       assert(s eq spark)
       assert(spark.conf.get(key) == "7")
-    } finally spark.conf.set(key, "4")
+      assert(spark.conf.get(provider) == hdfs)
+    } finally {
+      spark.conf.set(key, "4")
+      spark.conf.set(provider, rocks)
+    }
   }
 
   test("graft_cosine is SQL-callable and computes the fused kernel") {

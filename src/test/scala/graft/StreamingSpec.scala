@@ -2,6 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
+import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -11,7 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.pipeline.{RecordGenerator, TransactionalJdbcSink}
 import graft.schema.SchemaBridge
-import graft.streaming.{DocRecord, FunnelEvent, FunnelProgress, KeyedEvent, KeyRunning, NearDupPair, StreamMinhash, StreamOps, StreamingPipeline}
+import graft.streaming.{DocRecord, FunnelEvent, FunnelProgress, KeyedEvent, NearDupPair, StreamMinhash, StreamOps, StreamingPipeline}
 
 /** Streaming-layer tests (SURVEY §2.3.9, §5.2): watermarked windows with
   * late-data drop, session windows, stream dedup, explicit keyed state, and
@@ -27,6 +28,20 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def ts(minute: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
+
+  /** Run `body` in a fresh temp directory, then delete it. A Derby database
+    * the body created at `<dir>/db` is shut down first (SQLState 08006 is
+    * Derby's clean-shutdown signal), so none of its files stays open. */
+  private def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
+    val dir = java.nio.file.Files.createTempDirectory(prefix)
+    try body(dir)
+    finally {
+      if (java.nio.file.Files.exists(dir.resolve("db")))
+        try java.sql.DriverManager.getConnection(s"jdbc:derby:$dir/db;shutdown=true").close()
+        catch { case e: java.sql.SQLException if e.getSQLState == "08006" => () }
+      JavaUtils.deleteRecursively(dir.toFile)
+    }
+  }
 
   /** Run to a memory sink, processing each feed step as its own micro-batch
     * (watermarks only advance at batch boundaries). */
@@ -135,22 +150,29 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     implicit val sqlCtx = sp.sqlContext
     import sp.implicits._
-    val in = MemoryStream[KeyedEvent]
-    val run = StreamOps.runningPerKey(in.toDS())
-
-    val q = run.toDF().writeStream.format("memory").queryName("running")
-      .outputMode("update").start()
-    try {
-      in.addData(KeyedEvent("a", ts(1), 1.0), KeyedEvent("a", ts(2), 2.0))
-      q.processAllAvailable()
-      in.addData(KeyedEvent("a", ts(3), 4.0), KeyedEvent("b", ts(3), 10.0))
-      q.processAllAvailable()
-    } finally q.stop()
-    // last update per key wins: a has seen 3 events (sum 7), b one (sum 10)
-    val last = spark.table("running").groupBy("key")
-      .agg(max("count").as("c"), max("sum").as("s"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-    assert(last == Set(("a", 3L, 7.0), ("b", 1L, 10.0)))
+    // each inner Seq is one micro-batch; the last update per key wins
+    def lastPerKey(name: String, batches: Seq[KeyedEvent]*): Set[(String, Long, Double)] = {
+      val in = MemoryStream[KeyedEvent]
+      val q = StreamOps.runningPerKey(in.toDS()).toDF()
+        .writeStream.format("memory").queryName(name).outputMode("update").start()
+      try batches.foreach { b => in.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      spark.table(name).groupBy("key")
+        .agg(max("count").as("c"), max("sum").as("s"))
+        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
+    }
+    // a has seen 3 events (sum 7), b one (sum 10)
+    assert(lastPerKey("running",
+      Seq(KeyedEvent("a", ts(1), 1.0), KeyedEvent("a", ts(2), 2.0)),
+      Seq(KeyedEvent("a", ts(3), 4.0), KeyedEvent("b", ts(3), 10.0))) ==
+      Set(("a", 3L, 7.0), ("b", 1L, 10.0)))
+    // a key in both batches (b), and a key first seen in the second (c)
+    assert(lastPerKey("running2",
+      Seq(KeyedEvent("a", ts(1), 1.0), KeyedEvent("a", ts(2), 2.0),
+        KeyedEvent("b", ts(1), 10.0)),
+      Seq(KeyedEvent("a", ts(3), 4.0), KeyedEvent("b", ts(3), 10.0),
+        KeyedEvent("c", ts(4), 7.0))) ==
+      Set(("a", 3L, 7.0), ("b", 2L, 20.0), ("c", 1L, 7.0)))
   }
 
   test("semDedupStream replays batch q152 verdicts exactly under in-order delivery") {
@@ -202,85 +224,38 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // the frozen classifier: trained "offline", PERSISTED, then loaded the
     // way an ingest job deploys it (r19 Next #3 — the artifact half); the
     // loaded model must equal the in-session one field-for-field
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_nb_stream_spec").toString
-    graft.operators.Classifier.writeModel(sp, docsTbl, path)
-    val model = graft.operators.Classifier.loadModel(sp, path)
-    assert(model == graft.operators.Classifier.trainModel(docsTbl),
-      "artifact-loaded model diverged from the in-session trainer")
-    assert(model.loq.nonEmpty && model.oovLoq != 0L)
-    val all = docsTbl.select(col("doc_id"), col("text")).collect()
-      .map(r => graft.streaming.DocRecord(r.getLong(0), r.getString(1)))
-      .sortBy(_.doc_id)
-    val in = MemoryStream[graft.streaming.DocRecord]
-    val out = StreamOps.nbScoreStream(in.toDS(), model)
-    // two micro-batches: scoring is stateless so the split cannot matter,
-    // and a doc arriving in batch 2 must score identically to batch 1
-    val (b1, b2) = all.splitAt(all.length / 2)
-    val got = runToMemory(out, "nbscore")(
-      () => in.addData(b1), () => in.addData(b2))
-      .collect()
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
-      .toMap
-    val want = graft.operators.Classifier.nbQualityClassifier(docsTbl)
-      .select("doc_id", "n_tokens", "score_micronats", "pred").collect()
-      .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
-      .toMap
-    GraftSession.releasePersisted(sp)
-    assert(got.size == want.size, s"stream ${got.size} docs vs batch ${want.size}")
-    assert(got == want, {
-      val diff = want.collect { case (k, v) if got.get(k) != Some(v) =>
-        s"$k: batch $v vs stream ${got.get(k)}" }.take(5)
-      s"stream/batch score mismatch: ${diff.mkString("; ")}"
-    })
-  }
-
-  test("semDedupStreamTws (transformWithState) matches the legacy spelling " +
-      "and the batch lane on the fixture corpus") {
-    val sp = spark
-    implicit val sqlCtx = sp.sqlContext
-    import sp.implicits._
-    // the fourth and last fMGWS op ported to the successor API (r17):
-    // same fixture, same micro-batch split as the legacy parity test —
-    // tws ≡ legacy ≡ batch must all hold
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sfDir = "/root/testdata/sf0.001"
-      val all = graft.Tables(sp, sfDir, "embeddings")
-        .select(col("vec_id"), col("embedding"))
+    withTempDir("graft_nb_stream_spec") { nbDir =>
+      val path = nbDir.toString
+      graft.operators.Classifier.writeModel(sp, docsTbl, path)
+      val model = graft.operators.Classifier.loadModel(sp, path)
+      assert(model == graft.operators.Classifier.trainModel(docsTbl),
+        "artifact-loaded model diverged from the in-session trainer")
+      assert(model.loq.nonEmpty && model.oovLoq != 0L)
+      val all = docsTbl.select(col("doc_id"), col("text")).collect()
+        .map(r => graft.streaming.DocRecord(r.getLong(0), r.getString(1)))
+        .sortBy(_.doc_id)
+      val in = MemoryStream[graft.streaming.DocRecord]
+      val out = StreamOps.nbScoreStream(in.toDS(), model)
+      // two micro-batches: scoring is stateless so the split cannot matter,
+      // and a doc arriving in batch 2 must score identically to batch 1
+      val (b1, b2) = all.splitAt(all.length / 2)
+      val got = runToMemory(out, "nbscore")(
+        () => in.addData(b1), () => in.addData(b2))
         .collect()
-        .map(r => graft.streaming.EmbRecord(r.getLong(0), r.getSeq[Float](1)))
-        .sortBy(_.vec_id)
-      val stride = math.max(2L, math.round(math.sqrt(all.size.toDouble)))
-      val cents = all.filter(_.vec_id % stride == 0)
-        .map(r => r.vec_id -> r.embedding.map(_.toDouble).toArray).toSeq
-      def runThrough(name: String,
-          op: org.apache.spark.sql.Dataset[graft.streaming.EmbRecord] =>
-            org.apache.spark.sql.Dataset[graft.streaming.SemVerdict]) = {
-        val in = MemoryStream[graft.streaming.EmbRecord]
-        val (b1, rest) = all.splitAt(all.length / 3)
-        val (b2, b3) = rest.splitAt(rest.length / 3)
-        runToMemory(op(in.toDS()).toDF(), name)(
-          () => in.addData(b1), () => in.addData(b2), () => in.addData(b3))
-          .collect()
-          .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getBoolean(3))))
-          .toMap
-      }
-      val legacy = runThrough("semtws_legacy", ds => StreamOps.semDedupStream(ds, cents,
-        graft.operators.Dedup.SemMemberCap, graft.operators.Dedup.SemDupTau))
-      val tws = runThrough("semtws_new", ds => StreamOps.semDedupStreamTws(ds, cents,
-        graft.operators.Dedup.SemMemberCap, graft.operators.Dedup.SemDupTau))
-      assert(tws == legacy, {
-        val diff = legacy.collect { case (k, v) if tws.get(k) != Some(v) =>
-          s"$k: legacy $v vs tws ${tws.get(k)}" }.take(5)
-        s"APIs diverged: ${diff.mkString("; ")}"
-      })
-      val batch = graft.operators.Dedup.q152SemDedup(sp, sfDir).collect()
-        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getBoolean(3))))
+        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
         .toMap
-      assert(tws == batch, "tws verdicts diverged from the batch lane")
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      val want = graft.operators.Classifier.nbQualityClassifier(docsTbl)
+        .select("doc_id", "n_tokens", "score_micronats", "pred").collect()
+        .map(r => (r.getLong(0), (r.getLong(1), r.getLong(2), r.getLong(3))))
+        .toMap
+      GraftSession.releasePersisted(sp)
+      assert(got.size == want.size, s"stream ${got.size} docs vs batch ${want.size}")
+      assert(got == want, {
+        val diff = want.collect { case (k, v) if got.get(k) != Some(v) =>
+          s"$k: batch $v vs stream ${got.get(k)}" }.take(5)
+        s"stream/batch score mismatch: ${diff.mkString("; ")}"
+      })
+    }
   }
 
   test("semDedupStream: NaN similarity (degenerate zero embedding) matches batch SQL semantics") {
@@ -382,13 +357,10 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // a lost member silently flips later verdicts to "kept", a doubled
     // one can flip dup_of — so the resume assertion is full equality with
     // the batch q152 lane, not just row counts
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sp = spark
-      import sp.implicits._
-      val sfDir = "/root/testdata/sf0.001"
-      val tmp = java.nio.file.Files.createTempDirectory("graftsemdd")
+    val sp = spark
+    import sp.implicits._
+    val sfDir = "/root/testdata/sf0.001"
+    withTempDir("graftsemdd") { tmp =>
       val src = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
       val all = graft.Tables(sp, sfDir, "embeddings")
         .select(col("vec_id"), col("embedding"))
@@ -406,8 +378,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       }
       val schema = sp.read.parquet(src).schema
       val got = new java.util.concurrent.ConcurrentHashMap[Long, (Long, Long, Boolean)]
-      def start() = // drill drives the Tws spelling as primary (r16 #4)
-        StreamOps.semDedupStreamTws(
+      def start() =
+        StreamOps.semDedupStream(
           StreamingPipeline.fileSource(sp, src, schema, maxFilesPerTrigger = 1)
             .as[graft.streaming.EmbRecord],
           cents, graft.operators.Dedup.SemMemberCap, graft.operators.Dedup.SemDupTau)
@@ -440,7 +412,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       assert(got.size == all.length)
       import scala.jdk.CollectionConverters._
       assert(got.asScala.toMap == want, "kill/restart diverged from the batch lane")
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("admitPerKey caps each key at k across micro-batches, first-k by event time") {
@@ -472,68 +444,32 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     ), s"got=$got")
   }
 
-  test("stateful ops run unchanged on the RocksDB state store (the 100 TB conf)") {
+  test("builder sessions run stateful ops on the RocksDB state store") {
     val sp = spark
     implicit val sqlCtx = sp.sqlContext
     import sp.implicits._
-    // the StreamOps header claims state scales to RocksDB "via conf, no
-    // code change" — prove it: same operator, same results, and the
-    // progress metrics show RocksDB actually engaged
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // the suite's session sets no provider itself: GraftSession.builder's
+    // RocksDB conf must reach the state store, which the progress metrics
+    // show (without it the query fails: the HDFS-backed default cannot
+    // create transformWithState's column families)
+    val in = MemoryStream[KeyedEvent]
+    val q = StreamOps.admitPerKey(in.toDS(), k = 2).toDF()
+      .writeStream.format("memory").queryName("rocksadmit")
+      .outputMode("append").start()
     try {
-      val in = MemoryStream[KeyedEvent]
-      val q = StreamOps.admitPerKey(in.toDS(), k = 2).toDF()
-        .writeStream.format("memory").queryName("rocksadmit")
-        .outputMode("append").start()
-      try {
-        in.addData(KeyedEvent("a", ts(1), 1.0), KeyedEvent("a", ts(2), 2.0),
-          KeyedEvent("a", ts(3), 3.0))
-        q.processAllAvailable()
-        in.addData(KeyedEvent("a", ts(4), 4.0), KeyedEvent("b", ts(1), 5.0))
-        q.processAllAvailable()
-        val rocksMetrics = q.lastProgress.stateOperators
-          .flatMap(_.customMetrics.keySet.toArray(Array.empty[String]))
-          .filter(_.startsWith("rocksdb"))
-        assert(rocksMetrics.nonEmpty, "RocksDB state store did not engage")
-      } finally q.stop()
-      val got = spark.table("rocksadmit")
-        .collect().map(r => (r.getString(0), r.getDouble(2))).toSet
-      assert(got == Set(("a", 1.0), ("a", 2.0), ("b", 5.0)))
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("runningPerKeyTws (transformWithState) matches the flatMapGroupsWithState spelling") {
-    val sp = spark
-    implicit val sqlCtx = sp.sqlContext
-    import sp.implicits._
-    // transformWithState requires the RocksDB provider by contract
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val batches = Seq(
-        Seq(KeyedEvent("a", ts(1), 1.0), KeyedEvent("a", ts(2), 2.0),
-          KeyedEvent("b", ts(1), 10.0)),
-        Seq(KeyedEvent("a", ts(3), 4.0), KeyedEvent("b", ts(3), 10.0),
-          KeyedEvent("c", ts(4), 7.0)))
-      def runThrough(name: String,
-                     op: org.apache.spark.sql.Dataset[KeyedEvent] =>
-                       org.apache.spark.sql.Dataset[KeyRunning]): Set[(String, Long, Double)] = {
-        val in = MemoryStream[KeyedEvent]
-        val q = op(in.toDS()).toDF().writeStream.format("memory")
-          .queryName(name).outputMode("update").start()
-        try {
-          batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        } finally q.stop()
-        spark.table(name).groupBy("key")
-          .agg(max("count").as("c"), max("sum").as("s"))
-          .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-      }
-      val legacy = runThrough("tws_legacy", ds => StreamOps.runningPerKey(ds))
-      val tws = runThrough("tws_new", ds => StreamOps.runningPerKeyTws(ds))
-      assert(tws == legacy, s"APIs diverged: tws=$tws legacy=$legacy")
-      assert(tws == Set(("a", 3L, 7.0), ("b", 2L, 20.0), ("c", 1L, 7.0)))
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      in.addData(KeyedEvent("a", ts(1), 1.0), KeyedEvent("a", ts(2), 2.0),
+        KeyedEvent("a", ts(3), 3.0))
+      q.processAllAvailable()
+      in.addData(KeyedEvent("a", ts(4), 4.0), KeyedEvent("b", ts(1), 5.0))
+      q.processAllAvailable()
+      val rocksMetrics = q.lastProgress.stateOperators
+        .flatMap(_.customMetrics.keySet.toArray(Array.empty[String]))
+        .filter(_.startsWith("rocksdb"))
+      assert(rocksMetrics.nonEmpty, "RocksDB state store did not engage")
+    } finally q.stop()
+    val got = spark.table("rocksadmit")
+      .collect().map(r => (r.getString(0), r.getDouble(2))).toSet
+    assert(got == Set(("a", 1.0), ("a", 2.0), ("b", 5.0)))
   }
 
   test("tws ops accept a non-empty TTL (processing-time mode engages; " +
@@ -543,7 +479,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import sp.implicits._
     // r16 ADVICE #1: ttl=Some(...) used to pair TTLConfig with
     // TimeMode.None(), which Spark rejects at query start — the ttl option
-    // was documented but launching with it was a runtime error. Each Tws op
+    // was documented but launching with it was a runtime error. Each op
     // now derives ProcessingTime mode from the ttl; this spec actually
     // STARTS each op with a TTL (the failure was at start), and with a TTL
     // far longer than the test nothing expires, so results equal the
@@ -552,62 +488,58 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // Harness note: under processing-time mode the engine keeps scheduling
     // timer micro-batches, so `processAllAvailable` never settles (it
     // waited forever when this spec first used it — a genuine lesson, now
-    // in the Tws scaladocs: pace TTL'd queries with a real trigger).
+    // in StreamOps' scaladocs: pace TTL'd queries with a real trigger).
     // The spec therefore POLLS the sink for the expected rows.
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     def pollUntil(cond: () => Boolean, what: String): Unit = {
       val deadline = System.currentTimeMillis() + 90000
       while (!cond() && System.currentTimeMillis() < deadline) Thread.sleep(100)
       assert(cond(), s"timed out waiting for $what")
     }
+    val ttl = Some(java.time.Duration.ofHours(1))
+    // aggregate shape: state must carry across batches under the TTL mode
+    val rin = MemoryStream[KeyedEvent]
+    val rq = StreamOps.runningPerKey(rin.toDS(), ttl).toDF()
+      .writeStream.format("memory").queryName("ttlrun")
+      .outputMode("update").start()
+    def runRows() = spark.table("ttlrun")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
     try {
-      val ttl = Some(java.time.Duration.ofHours(1))
-      // aggregate shape: state must carry across batches under the TTL mode
-      val rin = MemoryStream[KeyedEvent]
-      val rq = StreamOps.runningPerKeyTws(rin.toDS(), ttl).toDF()
-        .writeStream.format("memory").queryName("ttlrun")
-        .outputMode("update").start()
-      def runRows() = spark.table("ttlrun")
-        .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2))).toSet
-      try {
-        rin.addData(KeyedEvent("a", ts(1), 1.0), KeyedEvent("b", ts(1), 10.0))
-        pollUntil(() => runRows().contains(("a", 1L, 1.0)), "batch-1 running rows")
-        rin.addData(KeyedEvent("a", ts(2), 2.0))
-        pollUntil(() => runRows().contains(("a", 2L, 3.0)), "batch-2 running rows")
-      } finally rq.stop()
-      assert(runRows().contains(("b", 1L, 10.0)))
-      // counter shape: the admitted count must survive batches under TTL
-      val ain = MemoryStream[KeyedEvent]
-      val aq = StreamOps.admitPerKeyTws(ain.toDS(), k = 2, ttl).toDF()
-        .writeStream.format("memory").queryName("ttladm")
-        .outputMode("append").start()
-      def admRows() = spark.table("ttladm")
-        .collect().map(r => (r.getString(0), r.getDouble(2))).toSet
-      try {
-        ain.addData(KeyedEvent("a", ts(1), 1.0), KeyedEvent("a", ts(2), 2.0))
-        pollUntil(() => admRows() == Set(("a", 1.0), ("a", 2.0)), "admitted pair")
-        ain.addData(KeyedEvent("a", ts(3), 3.0))
-        // the third event must stay REJECTED: state (admitted=2) survived
-        // the batch boundary under TTL mode; give the engine time to have
-        // processed it, then pin the set is unchanged
-        Thread.sleep(2000)
-        pollUntil(() => admRows() == Set(("a", 1.0), ("a", 2.0)), "cap held")
-      } finally aq.stop()
-      // state-machine shape: stages fill forward across batches under TTL
-      val fin = MemoryStream[FunnelEvent]
-      val fq = StreamOps.funnelPerUserTws(fin.toDS(), ttl).toDF()
-        .writeStream.format("memory").queryName("ttlfun")
-        .outputMode("update").start()
-      def funRows() = spark.table("ttlfun")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      try {
-        fin.addData(FunnelEvent(1L, 10L, "view"))
-        pollUntil(() => funRows().contains((1L, 10L, -1L)), "view stage")
-        fin.addData(FunnelEvent(1L, 20L, "click"))
-        pollUntil(() => funRows().contains((1L, 10L, 20L)), "click stage")
-      } finally fq.stop()
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      rin.addData(KeyedEvent("a", ts(1), 1.0), KeyedEvent("b", ts(1), 10.0))
+      pollUntil(() => runRows().contains(("a", 1L, 1.0)), "batch-1 running rows")
+      rin.addData(KeyedEvent("a", ts(2), 2.0))
+      pollUntil(() => runRows().contains(("a", 2L, 3.0)), "batch-2 running rows")
+    } finally rq.stop()
+    assert(runRows().contains(("b", 1L, 10.0)))
+    // counter shape: the admitted count must survive batches under TTL
+    val ain = MemoryStream[KeyedEvent]
+    val aq = StreamOps.admitPerKey(ain.toDS(), k = 2, ttl).toDF()
+      .writeStream.format("memory").queryName("ttladm")
+      .outputMode("append").start()
+    def admRows() = spark.table("ttladm")
+      .collect().map(r => (r.getString(0), r.getDouble(2))).toSet
+    try {
+      ain.addData(KeyedEvent("a", ts(1), 1.0), KeyedEvent("a", ts(2), 2.0))
+      pollUntil(() => admRows() == Set(("a", 1.0), ("a", 2.0)), "admitted pair")
+      ain.addData(KeyedEvent("a", ts(3), 3.0))
+      // the third event must stay REJECTED: state (admitted=2) survived
+      // the batch boundary under TTL mode; give the engine time to have
+      // processed it, then pin the set is unchanged
+      Thread.sleep(2000)
+      pollUntil(() => admRows() == Set(("a", 1.0), ("a", 2.0)), "cap held")
+    } finally aq.stop()
+    // state-machine shape: stages fill forward across batches under TTL
+    val fin = MemoryStream[FunnelEvent]
+    val fq = StreamOps.funnelPerUser(fin.toDS(), ttl).toDF()
+      .writeStream.format("memory").queryName("ttlfun")
+      .outputMode("update").start()
+    def funRows() = spark.table("ttlfun")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    try {
+      fin.addData(FunnelEvent(1L, 10L, "view"))
+      pollUntil(() => funRows().contains((1L, 10L, -1L)), "view stage")
+      fin.addData(FunnelEvent(1L, 20L, "click"))
+      pollUntil(() => funRows().contains((1L, 10L, 20L)), "click stage")
+    } finally fq.stop()
   }
 
   // ------------------------------------ streaming MinHash near-dup ingest
@@ -633,33 +565,29 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     implicit val sqlCtx = sp.sqlContext
     import sp.implicits._
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
+      .select("doc_id", "text").collect()
+      .map(r => DocRecord(r.getLong(0), r.getString(1)))
+      .sortBy(_.doc_id)
+    val expected = graft.operators.Dedup.confirmedNearDups(
+        Tables(spark, "/root/testdata/sf0.001", "documents"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    GraftSession.releasePersisted(spark)
+    val (batch1, batch2) = docs.splitAt(docs.length / 2)
+    val in = MemoryStream[DocRecord]
+    val q = StreamOps.neardupStream(in.toDS()).toDF()
+      .writeStream.format("memory").queryName("neardup")
+      .outputMode("append").start()
     try {
-      val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-        .select("doc_id", "text").collect()
-        .map(r => DocRecord(r.getLong(0), r.getString(1)))
-        .sortBy(_.doc_id)
-      val expected = graft.operators.Dedup.confirmedNearDups(
-          Tables(spark, "/root/testdata/sf0.001", "documents"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      GraftSession.releasePersisted(spark)
-      val (batch1, batch2) = docs.splitAt(docs.length / 2)
-      val in = MemoryStream[DocRecord]
-      val q = StreamOps.neardupStream(in.toDS()).toDF()
-        .writeStream.format("memory").queryName("neardup")
-        .outputMode("append").start()
-      try {
-        in.addData(batch1.toIndexedSeq); q.processAllAvailable()
-        in.addData(batch2.toIndexedSeq); q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("neardup")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got == expected,
-        s"stream/batch diverged: only-stream=${(got -- expected).take(3)} " +
-          s"only-batch=${(expected -- got).take(3)}")
-      assert(expected.nonEmpty, "vacuous parity: batch found no near-dups")
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      in.addData(batch1.toIndexedSeq); q.processAllAvailable()
+      in.addData(batch2.toIndexedSeq); q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("neardup")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got == expected,
+      s"stream/batch diverged: only-stream=${(got -- expected).take(3)} " +
+        s"only-batch=${(expected -- got).take(3)}")
+    assert(expected.nonEmpty, "vacuous parity: batch found no near-dups")
   }
 
   test("neardupStreamWithinWatermark emits the same confirmed pairs " +
@@ -667,34 +595,30 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     implicit val sqlCtx = sp.sqlContext
     import sp.implicits._
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
+      .select("doc_id", "text").collect()
+      .map(r => graft.streaming.TimedDocRecord(
+        r.getLong(0), r.getString(1), r.getLong(0) * 1000000L))
+      .sortBy(_.doc_id)
+    val expected = graft.operators.Dedup.confirmedNearDups(
+        Tables(spark, "/root/testdata/sf0.001", "documents"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    GraftSession.releasePersisted(spark)
+    val (batch1, batch2) = docs.splitAt(docs.length / 2)
+    val in = MemoryStream[graft.streaming.TimedDocRecord]
+    val q = StreamOps.neardupStreamWithinWatermark(in.toDS(), "10 seconds").toDF()
+      .writeStream.format("memory").queryName("neardupwm")
+      .outputMode("append").start()
     try {
-      val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-        .select("doc_id", "text").collect()
-        .map(r => graft.streaming.TimedDocRecord(
-          r.getLong(0), r.getString(1), r.getLong(0) * 1000000L))
-        .sortBy(_.doc_id)
-      val expected = graft.operators.Dedup.confirmedNearDups(
-          Tables(spark, "/root/testdata/sf0.001", "documents"))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      GraftSession.releasePersisted(spark)
-      val (batch1, batch2) = docs.splitAt(docs.length / 2)
-      val in = MemoryStream[graft.streaming.TimedDocRecord]
-      val q = StreamOps.neardupStreamWithinWatermark(in.toDS(), "10 seconds").toDF()
-        .writeStream.format("memory").queryName("neardupwm")
-        .outputMode("append").start()
-      try {
-        in.addData(batch1.toIndexedSeq); q.processAllAvailable()
-        in.addData(batch2.toIndexedSeq); q.processAllAvailable()
-      } finally q.stop()
-      val got = spark.table("neardupwm")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
-      assert(got == expected,
-        s"watermarked stream diverged: only-stream=${(got -- expected).take(3)} " +
-          s"only-batch=${(expected -- got).take(3)}")
-      assert(expected.nonEmpty, "vacuous parity: batch found no near-dups")
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      in.addData(batch1.toIndexedSeq); q.processAllAvailable()
+      in.addData(batch2.toIndexedSeq); q.processAllAvailable()
+    } finally q.stop()
+    val got = spark.table("neardupwm")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSet
+    assert(got == expected,
+      s"watermarked stream diverged: only-stream=${(got -- expected).take(3)} " +
+        s"only-batch=${(expected -- got).take(3)}")
+    assert(expected.nonEmpty, "vacuous parity: batch found no near-dups")
   }
 
   test("exactSubstrStream ≡ batch q161 spans on the fixture corpus " +
@@ -702,60 +626,56 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     implicit val sqlCtx = sp.sqlContext
     import sp.implicits._
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val k = graft.operators.Dedup.ExactSubstrK
+    // the q161 lane's canary injection, replicated on the stream input so
+    // both sides see the identical corpus
+    val header = "shared license header text appears before many documents in the crawl corpus"
+    val footer = "subscribe to our newsletter for updates and special offers"
+    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
+      .select("doc_id", "text").collect()
+      .filter(r => r.getString(1) != null && r.getString(1).trim.nonEmpty)
+      .map { r =>
+        val id = r.getLong(0)
+        val t = (if (id % 3 == 0) header + " " else "") + r.getString(1) +
+          (if (id % 5 == 0) " " + footer else "")
+        DocRecord(id, t)
+      }.sortBy(_.doc_id)
+    val expected = graft.operators.Dedup
+      .q161ExactSubstrSpans(spark, "/root/testdata/sf0.001")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    GraftSession.releasePersisted(spark)
+    // split mid-corpus: canary dups straddle the boundary, so the
+    // second batch must retro-emit firsts recorded in the first
+    val (batch1, batch2) = docs.splitAt(docs.length / 2)
+    val in = MemoryStream[DocRecord]
+    val q = StreamOps.exactSubstrStream(in.toDS()).toDF()
+      .writeStream.format("memory").queryName("exsubstr")
+      .outputMode("append").start()
     try {
-      val k = graft.operators.Dedup.ExactSubstrK
-      // the q161 lane's canary injection, replicated on the stream input so
-      // both sides see the identical corpus
-      val header = "shared license header text appears before many documents in the crawl corpus"
-      val footer = "subscribe to our newsletter for updates and special offers"
-      val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-        .select("doc_id", "text").collect()
-        .filter(r => r.getString(1) != null && r.getString(1).trim.nonEmpty)
-        .map { r =>
-          val id = r.getLong(0)
-          val t = (if (id % 3 == 0) header + " " else "") + r.getString(1) +
-            (if (id % 5 == 0) " " + footer else "")
-          DocRecord(id, t)
-        }.sortBy(_.doc_id)
-      val expected = graft.operators.Dedup
-        .q161ExactSubstrSpans(spark, "/root/testdata/sf0.001")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      GraftSession.releasePersisted(spark)
-      // split mid-corpus: canary dups straddle the boundary, so the
-      // second batch must retro-emit firsts recorded in the first
-      val (batch1, batch2) = docs.splitAt(docs.length / 2)
-      val in = MemoryStream[DocRecord]
-      val q = StreamOps.exactSubstrStream(in.toDS()).toDF()
-        .writeStream.format("memory").queryName("exsubstr")
-        .outputMode("append").start()
-      try {
-        in.addData(batch1.toIndexedSeq); q.processAllAvailable()
-        in.addData(batch2.toIndexedSeq); q.processAllAvailable()
-      } finally q.stop()
-      val occ = spark.table("exsubstr")
-        .collect().map(r => (r.getLong(0), r.getInt(1)))
-      // each duplicated occurrence must emit exactly once
-      assert(occ.length == occ.distinct.length, "an occurrence emitted twice")
-      // the batch lane's island merge, replayed driver-side over the
-      // stream's occurrence set
-      val spans = occ.groupBy(_._1).flatMap { case (doc, os) =>
-        val ps = os.map(_._2).sorted
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        var s0 = ps.head; var last = ps.head
-        ps.tail.foreach { p =>
-          if (p > last + k) { out += ((doc, s0.toLong, (last + k).toLong)); s0 = p }
-          last = p
-        }
-        out += ((doc, s0.toLong, (last + k).toLong))
-        out
-      }.toSet
-      assert(spans == expected,
-        s"stream/batch spans diverged: only-stream=${(spans -- expected).take(3)} " +
-          s"only-batch=${(expected -- spans).take(3)}")
-      assert(expected.nonEmpty, "vacuous parity: batch found no spans")
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      in.addData(batch1.toIndexedSeq); q.processAllAvailable()
+      in.addData(batch2.toIndexedSeq); q.processAllAvailable()
+    } finally q.stop()
+    val occ = spark.table("exsubstr")
+      .collect().map(r => (r.getLong(0), r.getInt(1)))
+    // each duplicated occurrence must emit exactly once
+    assert(occ.length == occ.distinct.length, "an occurrence emitted twice")
+    // the batch lane's island merge, replayed driver-side over the
+    // stream's occurrence set
+    val spans = occ.groupBy(_._1).flatMap { case (doc, os) =>
+      val ps = os.map(_._2).sorted
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+      var s0 = ps.head; var last = ps.head
+      ps.tail.foreach { p =>
+        if (p > last + k) { out += ((doc, s0.toLong, (last + k).toLong)); s0 = p }
+        last = p
+      }
+      out += ((doc, s0.toLong, (last + k).toLong))
+      out
+    }.toSet
+    assert(spans == expected,
+      s"stream/batch spans diverged: only-stream=${(spans -- expected).take(3)} " +
+        s"only-batch=${(expected -- spans).take(3)}")
+    assert(expected.nonEmpty, "vacuous parity: batch found no spans")
   }
 
   test("exactSubstrStreamWithinWatermark ≡ batch q161 inside the horizon " +
@@ -764,58 +684,54 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     implicit val sqlCtx = sp.sqlContext
     import sp.implicits._
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val k = graft.operators.Dedup.ExactSubstrK
+    val header = "shared license header text appears before many documents in the crawl corpus"
+    val footer = "subscribe to our newsletter for updates and special offers"
+    // event times spread one second per doc — the whole corpus spans
+    // ~500 s, inside the 1-hour horizon, so parity must be EXACT
+    val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
+      .select("doc_id", "text").collect()
+      .filter(r => r.getString(1) != null && r.getString(1).trim.nonEmpty)
+      .map { r =>
+        val id = r.getLong(0)
+        val t = (if (id % 3 == 0) header + " " else "") + r.getString(1) +
+          (if (id % 5 == 0) " " + footer else "")
+        // base epoch well past 0: a row whose event time equals the
+        // uninitialized watermark (epoch 0) is dropped as late
+        graft.streaming.TimedDocRecord(id, t, (1700000000L + id) * 1000000L)
+      }.sortBy(_.doc_id)
+    val expected = graft.operators.Dedup
+      .q161ExactSubstrSpans(spark, "/root/testdata/sf0.001")
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
+    GraftSession.releasePersisted(spark)
+    val (batch1, batch2) = docs.splitAt(docs.length / 2)
+    val in = MemoryStream[graft.streaming.TimedDocRecord]
+    val q = StreamOps.exactSubstrStreamWithinWatermark(in.toDS(), "1 hour").toDF()
+      .writeStream.format("memory").queryName("exsubstrwm")
+      .outputMode("append").start()
     try {
-      val k = graft.operators.Dedup.ExactSubstrK
-      val header = "shared license header text appears before many documents in the crawl corpus"
-      val footer = "subscribe to our newsletter for updates and special offers"
-      // event times spread one second per doc — the whole corpus spans
-      // ~500 s, inside the 1-hour horizon, so parity must be EXACT
-      val docs = Tables(spark, "/root/testdata/sf0.001", "documents")
-        .select("doc_id", "text").collect()
-        .filter(r => r.getString(1) != null && r.getString(1).trim.nonEmpty)
-        .map { r =>
-          val id = r.getLong(0)
-          val t = (if (id % 3 == 0) header + " " else "") + r.getString(1) +
-            (if (id % 5 == 0) " " + footer else "")
-          // base epoch well past 0: a row whose event time equals the
-          // uninitialized watermark (epoch 0) is dropped as late
-          graft.streaming.TimedDocRecord(id, t, (1700000000L + id) * 1000000L)
-        }.sortBy(_.doc_id)
-      val expected = graft.operators.Dedup
-        .q161ExactSubstrSpans(spark, "/root/testdata/sf0.001")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-      GraftSession.releasePersisted(spark)
-      val (batch1, batch2) = docs.splitAt(docs.length / 2)
-      val in = MemoryStream[graft.streaming.TimedDocRecord]
-      val q = StreamOps.exactSubstrStreamWithinWatermark(in.toDS(), "1 hour").toDF()
-        .writeStream.format("memory").queryName("exsubstrwm")
-        .outputMode("append").start()
-      try {
-        in.addData(batch1.toIndexedSeq); q.processAllAvailable()
-        in.addData(batch2.toIndexedSeq); q.processAllAvailable()
-      } finally q.stop()
-      val occ = spark.table("exsubstrwm")
-        .collect().map(r => (r.getLong(0), r.getInt(1)))
-      assert(occ.length == occ.distinct.length, "an occurrence emitted twice")
-      val spans = occ.groupBy(_._1).flatMap { case (doc, os) =>
-        val ps = os.map(_._2).sorted
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
-        var s0 = ps.head; var last = ps.head
-        ps.tail.foreach { p =>
-          if (p > last + k) { out += ((doc, s0.toLong, (last + k).toLong)); s0 = p }
-          last = p
-        }
-        out += ((doc, s0.toLong, (last + k).toLong))
-        out
-      }.toSet
-      assert(spans == expected,
-        s"watermarked stream diverged inside the horizon: " +
-          s"only-stream=${(spans -- expected).take(3)} " +
-          s"only-batch=${(expected -- spans).take(3)}")
-      assert(expected.nonEmpty, "vacuous parity: batch found no spans")
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      in.addData(batch1.toIndexedSeq); q.processAllAvailable()
+      in.addData(batch2.toIndexedSeq); q.processAllAvailable()
+    } finally q.stop()
+    val occ = spark.table("exsubstrwm")
+      .collect().map(r => (r.getLong(0), r.getInt(1)))
+    assert(occ.length == occ.distinct.length, "an occurrence emitted twice")
+    val spans = occ.groupBy(_._1).flatMap { case (doc, os) =>
+      val ps = os.map(_._2).sorted
+      val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Long)]
+      var s0 = ps.head; var last = ps.head
+      ps.tail.foreach { p =>
+        if (p > last + k) { out += ((doc, s0.toLong, (last + k).toLong)); s0 = p }
+        last = p
+      }
+      out += ((doc, s0.toLong, (last + k).toLong))
+      out
+    }.toSet
+    assert(spans == expected,
+      s"watermarked stream diverged inside the horizon: " +
+        s"only-stream=${(spans -- expected).take(3)} " +
+        s"only-batch=${(expected -- spans).take(3)}")
+    assert(expected.nonEmpty, "vacuous parity: batch found no spans")
   }
 
   test("exactSubstrStreamWithinWatermark EVICTS: a re-occurrence beyond the " +
@@ -823,59 +739,52 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sp = spark
     implicit val sqlCtx = sp.sqlContext
     import sp.implicits._
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val shared = "one two three four five six seven eight"
+    def rec(id: Long, text: String, sec: Long) =
+      graft.streaming.TimedDocRecord(id, text, (1700000000L + sec) * 1000000L)
+    val filler1 = "f1a f1b f1c f1d f1e f1f f1g f1h" // unique windows
+    val filler2 = "f2a f2b f2c f2d f2e f2f f2g f2h"
+    val in = MemoryStream[graft.streaming.TimedDocRecord]
+    val q = StreamOps.exactSubstrStreamWithinWatermark(in.toDS(), "10 seconds").toDF()
+      .writeStream.format("memory").queryName("exsubstrev")
+      .outputMode("append").start()
     try {
-      val shared = "one two three four five six seven eight"
-      def rec(id: Long, text: String, sec: Long) =
-        graft.streaming.TimedDocRecord(id, text, (1700000000L + sec) * 1000000L)
-      val filler1 = "f1a f1b f1c f1d f1e f1f f1g f1h" // unique windows
-      val filler2 = "f2a f2b f2c f2d f2e f2f f2g f2h"
-      val in = MemoryStream[graft.streaming.TimedDocRecord]
-      val q = StreamOps.exactSubstrStreamWithinWatermark(in.toDS(), "10 seconds").toDF()
-        .writeStream.format("memory").queryName("exsubstrev")
-        .outputMode("append").start()
-      try {
-        // batch 1: the window's first occurrence at t=0
-        in.addData(rec(1, shared, 0)); q.processAllAvailable()
-        // batch 2: advance the watermark far past 0+10 s (event at t=1 h);
-        // the eviction timer for doc 1's window becomes expired
-        in.addData(rec(2, filler1, 3600)); q.processAllAvailable()
-        // batch 3: another filler batch — timers fire against the advanced
-        // watermark here, so the eviction provably happens BEFORE doc 3
-        in.addData(rec(3, filler2, 3601)); q.processAllAvailable()
-        // batch 4: the SAME window re-occurs beyond the horizon — with the
-        // first evicted it must be treated as a fresh first (no emission)
-        in.addData(rec(4, shared, 3602)); q.processAllAvailable()
-      } finally q.stop()
-      val occ = spark.table("exsubstrev").collect().map(r => (r.getLong(0), r.getInt(1)))
-      assert(occ.isEmpty,
-        s"state did not expire: occurrences emitted across the horizon: ${occ.toSeq}")
-      // control: the same feed with everything INSIDE the horizon does emit
-      val in2 = MemoryStream[graft.streaming.TimedDocRecord]
-      val q2 = StreamOps.exactSubstrStreamWithinWatermark(in2.toDS(), "10 seconds").toDF()
-        .writeStream.format("memory").queryName("exsubstrev2")
-        .outputMode("append").start()
-      try {
-        in2.addData(rec(1, shared, 0)); q2.processAllAvailable()
-        in2.addData(rec(4, shared, 2)); q2.processAllAvailable()
-      } finally q2.stop()
-      val occ2 = spark.table("exsubstrev2").collect().map(r => (r.getLong(0), r.getInt(1)))
-      assert(occ2.toSet == Set((1L, 0), (4L, 0)),
-        s"control pair inside the horizon should emit both occurrences: ${occ2.toSeq}")
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      // batch 1: the window's first occurrence at t=0
+      in.addData(rec(1, shared, 0)); q.processAllAvailable()
+      // batch 2: advance the watermark far past 0+10 s (event at t=1 h);
+      // the eviction timer for doc 1's window becomes expired
+      in.addData(rec(2, filler1, 3600)); q.processAllAvailable()
+      // batch 3: another filler batch — timers fire against the advanced
+      // watermark here, so the eviction provably happens BEFORE doc 3
+      in.addData(rec(3, filler2, 3601)); q.processAllAvailable()
+      // batch 4: the SAME window re-occurs beyond the horizon — with the
+      // first evicted it must be treated as a fresh first (no emission)
+      in.addData(rec(4, shared, 3602)); q.processAllAvailable()
+    } finally q.stop()
+    val occ = spark.table("exsubstrev").collect().map(r => (r.getLong(0), r.getInt(1)))
+    assert(occ.isEmpty,
+      s"state did not expire: occurrences emitted across the horizon: ${occ.toSeq}")
+    // control: the same feed with everything INSIDE the horizon does emit
+    val in2 = MemoryStream[graft.streaming.TimedDocRecord]
+    val q2 = StreamOps.exactSubstrStreamWithinWatermark(in2.toDS(), "10 seconds").toDF()
+      .writeStream.format("memory").queryName("exsubstrev2")
+      .outputMode("append").start()
+    try {
+      in2.addData(rec(1, shared, 0)); q2.processAllAvailable()
+      in2.addData(rec(4, shared, 2)); q2.processAllAvailable()
+    } finally q2.stop()
+    val occ2 = spark.table("exsubstrev2").collect().map(r => (r.getLong(0), r.getInt(1)))
+    assert(occ2.toSet == Set((1L, 0), (4L, 0)),
+      s"control pair inside the horizon should emit both occurrences: ${occ2.toSeq}")
   }
 
   test("exactSubstrStreamWithinWatermark: RocksDB kill/restart resumes to " +
       "batch parity (the r18 drill on the new variant)") {
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sp = spark
-      import sp.implicits._
-      val k = graft.operators.Dedup.ExactSubstrK
-      val sfDir = "/root/testdata/sf0.001"
-      val tmp = java.nio.file.Files.createTempDirectory("graftexsub")
+    val sp = spark
+    import sp.implicits._
+    val k = graft.operators.Dedup.ExactSubstrK
+    val sfDir = "/root/testdata/sf0.001"
+    withTempDir("graftexsub") { tmp =>
       val src = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
       val header = "shared license header text appears before many documents in the crawl corpus"
       val footer = "subscribe to our newsletter for updates and special offers"
@@ -935,7 +844,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       }.toSet
       assert(spans == expected, "kill/restart diverged from the batch q161 spans")
       assert(expected.nonEmpty, "vacuous drill: no spans")
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("hashed bucket state is measurably smaller than raw word-set state " +
@@ -993,12 +902,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // resumed from checkpoint; the emitted pair set must EQUAL the batch
     // confirmedNearDups of the same frame (kill+resume lost or doubled
     // nothing — replayed batches re-emit identical pairs, the set dedups)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sp = spark
-      import sp.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graftnd")
+    val sp = spark
+    import sp.implicits._
+    withTempDir("graftnd") { tmp =>
       val src = s"$tmp/src"
       val nFiles = 8
       val perFile = 6250L
@@ -1058,45 +964,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
           .filter(_.startsWith("rocksdb")))
       assert(rocksMetrics.exists(_.nonEmpty),
         "RocksDB state store did not engage in the neardup drill")
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-  }
-
-  test("admitPerKeyTws (transformWithState) matches admitPerKey on the golden batches") {
-    val sp = spark
-    implicit val sqlCtx = sp.sqlContext
-    import sp.implicits._
-    // transformWithState requires the RocksDB provider by contract
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // the admitPerKey golden fixture, same micro-batch split — old ≡ new
-      // must hold batch-for-batch, not just in aggregate
-      val batches = Seq(
-        Seq(KeyedEvent("a", ts(1), 1.0), KeyedEvent("a", ts(2), 2.0),
-          KeyedEvent("b", ts(4), 40.0), KeyedEvent("b", ts(1), 10.0),
-          KeyedEvent("b", ts(2), 20.0), KeyedEvent("b", ts(3), 30.0)),
-        Seq(KeyedEvent("a", ts(3), 3.0), KeyedEvent("a", ts(4), 4.0),
-          KeyedEvent("b", ts(5), 50.0)))
-      def runThrough(name: String,
-                     op: org.apache.spark.sql.Dataset[KeyedEvent] =>
-                       org.apache.spark.sql.Dataset[KeyedEvent]): Set[(String, Double)] = {
-        val in = MemoryStream[KeyedEvent]
-        val q = op(in.toDS()).toDF().writeStream.format("memory")
-          .queryName(name).outputMode("append").start()
-        try {
-          batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        } finally q.stop()
-        spark.table(name)
-          .collect().map(r => (r.getString(0), r.getDouble(2))).toSet
-      }
-      val legacy = runThrough("admtws_legacy", ds => StreamOps.admitPerKey(ds, k = 3))
-      val tws = runThrough("admtws_new", ds => StreamOps.admitPerKeyTws(ds, k = 3))
-      assert(tws == legacy, s"APIs diverged: tws=$tws legacy=$legacy")
-      // and both equal the golden expectation the admitPerKey test pins
-      assert(tws == Set(
-        ("a", 1.0), ("a", 2.0), ("a", 3.0),
-        ("b", 10.0), ("b", 20.0), ("b", 30.0)), s"got=$tws")
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("funnelPerUser: ordered stages advance, disorder and skips don't") {
@@ -1132,44 +1000,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       (2L, 10L, -1L, -1L),   // click-before-view never counts
       (3L, 10L, -1L, -1L),   // purchase without a click never counts
       (4L, 10L, 12L, -1L)))  // tie dropped, later click accepted
-  }
-
-  test("funnelPerUserTws (transformWithState) matches funnelPerUser on the golden batches") {
-    val sp = spark
-    implicit val sqlCtx = sp.sqlContext
-    import sp.implicits._
-    sp.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      // the funnelPerUser golden fixture, same micro-batch split: the
-      // state-machine semantics (fill-forward stages, strictly-after
-      // contract, disorder/skips dropped) must agree batch-for-batch
-      val batches = Seq(
-        Seq(FunnelEvent(1L, 10L, "view"), FunnelEvent(1L, 20L, "click"),
-          FunnelEvent(2L, 5L, "click"), FunnelEvent(2L, 10L, "view"),
-          FunnelEvent(3L, 10L, "view"), FunnelEvent(3L, 15L, "purchase"),
-          FunnelEvent(4L, 10L, "view"), FunnelEvent(4L, 10L, "click")),
-        Seq(FunnelEvent(1L, 30L, "purchase"), FunnelEvent(4L, 12L, "click")))
-      def runThrough(name: String,
-                     op: org.apache.spark.sql.Dataset[FunnelEvent] =>
-                       org.apache.spark.sql.Dataset[FunnelProgress]): Set[(Long, Long, Long, Long)] = {
-        val in = MemoryStream[FunnelEvent]
-        val q = op(in.toDS()).toDF().writeStream.format("memory")
-          .queryName(name).outputMode("update").start()
-        try {
-          batches.foreach { b => in.addData(b); q.processAllAvailable() }
-        } finally q.stop()
-        spark.table(name).groupBy("user_id")
-          .agg(max("vt").as("vt"), max("ct").as("ct"), max("pt").as("pt"))
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3))).toSet
-      }
-      val legacy = runThrough("funtws_legacy", ds => StreamOps.funnelPerUser(ds))
-      val tws = runThrough("funtws_new", ds => StreamOps.funnelPerUserTws(ds))
-      assert(tws == legacy, s"APIs diverged: tws=$tws legacy=$legacy")
-      assert(tws == Set(
-        (1L, 10L, 20L, 30L), (2L, 10L, -1L, -1L),
-        (3L, 10L, -1L, -1L), (4L, 10L, 12L, -1L)), s"got=$tws")
-    } finally sp.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("stream-static enrichment join broadcasts the dim, keeps left rows") {
@@ -1251,55 +1081,57 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // normalized bigint `ts` — the raw file's physical type is the driver's
     // choice (nanos through r6, micros since the r7 regen) and a raw copy
     // read under batch.schema would mis-type the column
-    val dir = java.nio.file.Files.createTempDirectory("graftevents")
-    batch.coalesce(1).write.mode("overwrite").parquet(dir.toString)
-    val stream = StreamingPipeline.fileSource(
-      spark, dir.toString, batch.schema, maxFilesPerTrigger = 1)
-      .withColumn("tst", StreamOps.nanosToTimestamp(col("ts")))
-    val agg = StreamOps.tumblingAgg(
-      stream, "tst", watermark = "1 hour", width = "1 hour",
-      keys = Seq(col("event_type")), aggs = Seq(count("*").as("n")))
-    val q = agg.writeStream.format("memory").queryName("ev_stream")
-      .outputMode("update").start()
-    try q.processAllAvailable() finally q.stop()
-    // streaming windowed counts must reconcile with the batch groupBy total
-    val streamed = spark.table("ev_stream").agg(sum("n")).collect()(0).getLong(0)
-    assert(streamed == batch.count(), s"streamed $streamed != batch ${batch.count()}")
+    withTempDir("graftevents") { dir =>
+      batch.coalesce(1).write.mode("overwrite").parquet(dir.toString)
+      val stream = StreamingPipeline.fileSource(
+        spark, dir.toString, batch.schema, maxFilesPerTrigger = 1)
+        .withColumn("tst", StreamOps.nanosToTimestamp(col("ts")))
+      val agg = StreamOps.tumblingAgg(
+        stream, "tst", watermark = "1 hour", width = "1 hour",
+        keys = Seq(col("event_type")), aggs = Seq(count("*").as("n")))
+      val q = agg.writeStream.format("memory").queryName("ev_stream")
+        .outputMode("update").start()
+      try q.processAllAvailable() finally q.stop()
+      // streaming windowed counts must reconcile with the batch groupBy total
+      val streamed = spark.table("ev_stream").agg(sum("n")).collect()(0).getLong(0)
+      assert(streamed == batch.count(), s"streamed $streamed != batch ${batch.count()}")
+    }
   }
 
   test("full composition: framed Avro stream -> registry decode -> agg -> txn sink") {
     import graft.pipeline.{ConfluentAvro, RecordGenerator, SchemaRegistry, TransactionalJdbcSink}
     import graft.schema.SchemaBridge
-    val tmp = java.nio.file.Files.createTempDirectory("graftcompose")
-    val ss = SchemaBridge.parseSimple(
-      """[{"name":"comp","fields":{"key_field":"string","ts_field":"long","dbl_field":"double"}}]""").head
-    val avro = SchemaBridge.toAvro(ss)
-    val id = SchemaRegistry.register("comp-value", avro)
+    withTempDir("graftcompose") { tmp =>
+      val ss = SchemaBridge.parseSimple(
+        """[{"name":"comp","fields":{"key_field":"string","ts_field":"long","dbl_field":"double"}}]""").head
+      val avro = SchemaBridge.toAvro(ss)
+      val id = SchemaRegistry.register("comp-value", avro)
 
-    // producer leg (reference 02-producer): generate + frame, landed as files
-    ConfluentAvro.encode(RecordGenerator.generate(spark, ss, 600, seed = 5), avro, id, 3)
-      .coalesce(2).write.mode("overwrite").parquet(s"$tmp/frames")
+      // producer leg (reference 02-producer): generate + frame, landed as files
+      ConfluentAvro.encode(RecordGenerator.generate(spark, ss, 600, seed = 5), avro, id, 3)
+        .coalesce(2).write.mode("overwrite").parquet(s"$tmp/frames")
 
-    // consumer leg (reference 03-consumer): stream frames, decode via the
-    // registry snapshot, land rows exactly-once
-    val framesSchema = spark.read.parquet(s"$tmp/frames").schema
-    val stream = graft.streaming.StreamingPipeline.fileSource(
-      spark, s"$tmp/frames", framesSchema, maxFilesPerTrigger = 1)
-    val decoded = ConfluentAvro.decodeAuto(stream, "value", avro)
-    val url = s"jdbc:derby:$tmp/db;create=true"
-    val sink = new TransactionalJdbcSink(url, "comp", "compose-q")
-    sink.ensureTables(decoded.schema)
-    graft.streaming.StreamingPipeline.toJdbc(decoded, sink, s"$tmp/ckpt")
-      .awaitTermination(60000)
-    assert(sink.dataCount() == 600, s"lost/duplicated rows: ${sink.dataCount()}")
+      // consumer leg (reference 03-consumer): stream frames, decode via the
+      // registry snapshot, land rows exactly-once
+      val framesSchema = spark.read.parquet(s"$tmp/frames").schema
+      val stream = graft.streaming.StreamingPipeline.fileSource(
+        spark, s"$tmp/frames", framesSchema, maxFilesPerTrigger = 1)
+      val decoded = ConfluentAvro.decodeAuto(stream, "value", avro)
+      val url = s"jdbc:derby:$tmp/db;create=true"
+      val sink = new TransactionalJdbcSink(url, "comp", "compose-q")
+      sink.ensureTables(decoded.schema)
+      graft.streaming.StreamingPipeline.toJdbc(decoded, sink, s"$tmp/ckpt")
+        .awaitTermination(60000)
+      assert(sink.dataCount() == 600, s"lost/duplicated rows: ${sink.dataCount()}")
 
-    // landed values must equal the generated source exactly (serde fidelity)
-    val landed = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", """"comp"""").load()
-    val src = RecordGenerator.generate(spark, ss, 600, seed = 5)
-    val norm = (df: DataFrame) =>
-      df.orderBy("key_field", "ts_field", "dbl_field").collect().toSeq
-    assert(norm(landed.select("key_field", "ts_field", "dbl_field")) == norm(src))
+      // landed values must equal the generated source exactly (serde fidelity)
+      val landed = spark.read.format("jdbc")
+        .option("url", url).option("dbtable", """"comp"""").load()
+      val src = RecordGenerator.generate(spark, ss, 600, seed = 5)
+      val norm = (df: DataFrame) =>
+        df.orderBy("key_field", "ts_field", "dbl_field").collect().toSeq
+      assert(norm(landed.select("key_field", "ts_field", "dbl_field")) == norm(src))
+    }
   }
 
   // -------------------------------- end-to-end exactly-once restart drill
@@ -1315,81 +1147,78 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // HDFS-backed store holds state on-heap and can't spill a production
     // dedup horizon). Same operator code, conf only; the kill+resume leg
     // now also exercises RocksDB snapshot load from the checkpoint.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-    val tmp = java.nio.file.Files.createTempDirectory("graftscale")
-    val srcDir = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
-    val url = s"jdbc:derby:$tmp/db;create=true"
-    val nFiles = 8; val rowsPerFile = 125000L; val distinctPerFile = 12500L
-    val base = 1704067200L // 2024-01-01 00:00:00 UTC, epoch seconds
-    // file f = one micro-batch one hour after file f-1; every content string
-    // repeats 10x inside its file (dedup fodder) and never recurs across
-    // files, so expected landed rows = nFiles * distinctPerFile exactly.
-    // Timestamps inside a file span <10 min (the watermark), so each file's
-    // state lives exactly one batch and the 1h gap evicts it on the next.
-    (0 until nFiles).foreach { f =>
-      spark.range(rowsPerFile).select(
-        (lit(base + f * 3600L) + (col("id") % 500)).cast("timestamp").as("ts"),
-        (col("id") + f * rowsPerFile).as("doc_id"),
-        concat(lit(s"file$f content "), col("id") % distinctPerFile).as("text"))
-        .coalesce(1).write.mode("append").parquet(srcDir)
+    withTempDir("graftscale") { tmp =>
+      val srcDir = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
+      val url = s"jdbc:derby:$tmp/db;create=true"
+      val nFiles = 8; val rowsPerFile = 125000L; val distinctPerFile = 12500L
+      val base = 1704067200L // 2024-01-01 00:00:00 UTC, epoch seconds
+      // file f = one micro-batch one hour after file f-1; every content string
+      // repeats 10x inside its file (dedup fodder) and never recurs across
+      // files, so expected landed rows = nFiles * distinctPerFile exactly.
+      // Timestamps inside a file span <10 min (the watermark), so each file's
+      // state lives exactly one batch and the 1h gap evicts it on the next.
+      (0 until nFiles).foreach { f =>
+        spark.range(rowsPerFile).select(
+          (lit(base + f * 3600L) + (col("id") % 500)).cast("timestamp").as("ts"),
+          (col("id") + f * rowsPerFile).as("doc_id"),
+          concat(lit(s"file$f content "), col("id") % distinctPerFile).as("text"))
+          .coalesce(1).write.mode("append").parquet(srcDir)
+      }
+      val schema = spark.read.parquet(srcDir).schema
+      val sink = new TransactionalJdbcSink(url, "scale_docs", "scale-q")
+      val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("ts_s", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
+      sink.ensureTables(sinkSchema)
+      def pipeline(): DataFrame =
+        StreamOps.dedupByContent(
+          StreamingPipeline.fileSource(spark, srcDir, schema, maxFilesPerTrigger = 1),
+          "ts", watermark = "10 minutes")
+          .select(col("doc_id"), col("ts").cast("long").as("ts_s"), col("text"))
+
+      // run 1: land at least one micro-batch, then kill mid-stream
+      val q1 = pipeline().writeStream
+        .foreachBatch((b: DataFrame, id: Long) => sink.writeBatch(b, id))
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.ProcessingTime(100))
+        .start()
+      try {
+        val deadline = System.currentTimeMillis() + 120000
+        while (sink.dataCount() < distinctPerFile && System.currentTimeMillis() < deadline)
+          Thread.sleep(100)
+      } finally q1.stop()
+      val afterKill = sink.dataCount()
+      assert(afterKill >= distinctPerFile, s"no batch landed before the kill: $afterKill")
+
+      // run 2: resume from checkpoint to completion — exactly-once at volume
+      val q2 = StreamingPipeline.toJdbc(pipeline(), sink, ckpt, Trigger.AvailableNow())
+      q2.awaitTermination(300000)
+      val landed = sink.dataCount()
+      assert(landed == nFiles * distinctPerFile,
+        s"exactly-once + dedup violated: $landed != ${nFiles * distinctPerFile}")
+
+      // bounded state: after the last batch the watermark sits 10 min behind
+      // file 7's max event time — hours past every earlier file — so the store
+      // holds only file 7's distinct fingerprints, NOT the 100k seen overall.
+      // (2x slack: eviction granularity, no-data batches.)
+      val stateRows = q2.recentProgress.reverse
+        .flatMap(p => Option(p.stateOperators)).find(_.nonEmpty)
+        .map(_.head.numRowsTotal)
+      assert(stateRows.isDefined, "no state-operator progress recorded")
+      assert(stateRows.get <= 2 * distinctPerFile,
+        s"dedup state grew past the watermark horizon: ${stateRows.get} rows " +
+          s"(horizon holds $distinctPerFile)")
+      // and RocksDB must have actually carried that state (conf typos fall
+      // back silently to the default provider — the metric names prove it)
+      val rocksMetrics = q2.recentProgress.reverse
+        .flatMap(p => Option(p.stateOperators)).find(_.nonEmpty)
+        .map(_.head.customMetrics.keySet.toArray(Array.empty[String])
+          .filter(_.startsWith("rocksdb")))
+      assert(rocksMetrics.exists(_.nonEmpty),
+        "RocksDB state store did not engage in the restart drill")
+      info(s"landed=$landed stateRows=${stateRows.get} (horizon=$distinctPerFile)")
     }
-    val schema = spark.read.parquet(srcDir).schema
-    val sink = new TransactionalJdbcSink(url, "scale_docs", "scale-q")
-    val sinkSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts_s", org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("text", org.apache.spark.sql.types.StringType)))
-    sink.ensureTables(sinkSchema)
-    def pipeline(): DataFrame =
-      StreamOps.dedupByContent(
-        StreamingPipeline.fileSource(spark, srcDir, schema, maxFilesPerTrigger = 1),
-        "ts", watermark = "10 minutes")
-        .select(col("doc_id"), col("ts").cast("long").as("ts_s"), col("text"))
-
-    // run 1: land at least one micro-batch, then kill mid-stream
-    val q1 = pipeline().writeStream
-      .foreachBatch((b: DataFrame, id: Long) => sink.writeBatch(b, id))
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.ProcessingTime(100))
-      .start()
-    try {
-      val deadline = System.currentTimeMillis() + 120000
-      while (sink.dataCount() < distinctPerFile && System.currentTimeMillis() < deadline)
-        Thread.sleep(100)
-    } finally q1.stop()
-    val afterKill = sink.dataCount()
-    assert(afterKill >= distinctPerFile, s"no batch landed before the kill: $afterKill")
-
-    // run 2: resume from checkpoint to completion — exactly-once at volume
-    val q2 = StreamingPipeline.toJdbc(pipeline(), sink, ckpt, Trigger.AvailableNow())
-    q2.awaitTermination(300000)
-    val landed = sink.dataCount()
-    assert(landed == nFiles * distinctPerFile,
-      s"exactly-once + dedup violated: $landed != ${nFiles * distinctPerFile}")
-
-    // bounded state: after the last batch the watermark sits 10 min behind
-    // file 7's max event time — hours past every earlier file — so the store
-    // holds only file 7's distinct fingerprints, NOT the 100k seen overall.
-    // (2x slack: eviction granularity, no-data batches.)
-    val stateRows = q2.recentProgress.reverse
-      .flatMap(p => Option(p.stateOperators)).find(_.nonEmpty)
-      .map(_.head.numRowsTotal)
-    assert(stateRows.isDefined, "no state-operator progress recorded")
-    assert(stateRows.get <= 2 * distinctPerFile,
-      s"dedup state grew past the watermark horizon: ${stateRows.get} rows " +
-        s"(horizon holds $distinctPerFile)")
-    // and RocksDB must have actually carried that state (conf typos fall
-    // back silently to the default provider — the metric names prove it)
-    val rocksMetrics = q2.recentProgress.reverse
-      .flatMap(p => Option(p.stateOperators)).find(_.nonEmpty)
-      .map(_.head.customMetrics.keySet.toArray(Array.empty[String])
-        .filter(_.startsWith("rocksdb")))
-    assert(rocksMetrics.exists(_.nonEmpty),
-      "RocksDB state store did not engage in the restart drill")
-    info(s"landed=$landed stateRows=${stateRows.get} (horizon=$distinctPerFile)")
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
   }
 
   test("scale drill: 1M-row funnel + admission kill/restart — bounded state, " +
@@ -1402,16 +1231,9 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     // show (a) final state EXACTLY matching an independent driver-side
     // replay of the same fold (kill+resume lost or doubled nothing) and
     // (b) state rows bounded by the key set, not the event count.
-    // r17 (r16 verdict #4): the drill drives the transformWithState
-    // spellings (funnelPerUserTws / admitPerKeyTws) as the PRIMARY path now
-    // the trilogy is pinned ≡ legacy — the legacy flatMapGroupsWithState
-    // ops stay in-tree as the parity reference the golden specs compare.
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val sp = spark
-      import sp.implicits._
-      val tmp = java.nio.file.Files.createTempDirectory("graftsc2")
+    val sp = spark
+    import sp.implicits._
+    withTempDir("graftsc2") { tmp =>
       val nFiles = 8
 
       // ---- funnelPerUser: 125k users × 1 event per file = 1M events.
@@ -1449,11 +1271,11 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val funSchema = spark.read.parquet(funSrc).schema
       val funnelState = new java.util.concurrent.ConcurrentHashMap[Long, (Long, Long, Long)]
       def funnelStream(trigger: Trigger) =
-        StreamOps.funnelPerUserTws(
+        StreamOps.funnelPerUser(
           StreamingPipeline.fileSource(spark, funSrc, funSchema, maxFilesPerTrigger = 1)
             .as[FunnelEvent])
           .writeStream.outputMode("update")
-          .foreachBatch { (b: org.apache.spark.sql.Dataset[graft.streaming.FunnelProgress], _: Long) =>
+          .foreachBatch { (b: org.apache.spark.sql.Dataset[FunnelProgress], _: Long) =>
             // latest emission per user wins; stages only fill forward and
             // replayed batches re-emit identical states, so the merge is
             // idempotent across the kill
@@ -1501,7 +1323,7 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
       val admSchema = spark.read.parquet(admSrc).schema
       val admitted = java.util.concurrent.ConcurrentHashMap.newKeySet[(String, Double)]
       def admitStream(trigger: Trigger) =
-        StreamOps.admitPerKeyTws(
+        StreamOps.admitPerKey(
           StreamingPipeline.fileSource(spark, admSrc, admSchema, maxFilesPerTrigger = 1)
             .as[KeyedEvent], cap)
           .writeStream.outputMode("append")
@@ -1536,46 +1358,47 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         s"admission state grew past the key set: $admitStateRows > $keys")
       info(s"funnel users=$users stateRows=$funnelStateRows; " +
         s"admitted keys=${perKey.size} stateRows=$admitStateRows")
-    } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+    }
   }
 
   test("file stream -> txn sink: restart from checkpoint lands every row exactly once") {
-    val tmp = java.nio.file.Files.createTempDirectory("graftstream")
-    val srcDir = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
-    val url = s"jdbc:derby:$tmp/db;create=true"
+    withTempDir("graftstream") { tmp =>
+      val srcDir = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
+      val url = s"jdbc:derby:$tmp/db;create=true"
 
-    val ss = SchemaBridge.parseSimple(
-      """[{"name":"sds","fields":{"key_field":"string","ts_field":"long","dbl_field":"double"}}]""").head
-    // 4 source files => 4 micro-batches at maxFilesPerTrigger=1 (rate cap R11)
-    (0 until 4).foreach { i =>
-      RecordGenerator.generate(spark, ss, 250, seed = i)
-        .coalesce(1).write.mode("append").parquet(srcDir)
+      val ss = SchemaBridge.parseSimple(
+        """[{"name":"sds","fields":{"key_field":"string","ts_field":"long","dbl_field":"double"}}]""").head
+      // 4 source files => 4 micro-batches at maxFilesPerTrigger=1 (rate cap R11)
+      (0 until 4).foreach { i =>
+        RecordGenerator.generate(spark, ss, 250, seed = i)
+          .coalesce(1).write.mode("append").parquet(srcDir)
+      }
+      val schema = spark.read.parquet(srcDir).schema
+      val sink = new TransactionalJdbcSink(url, "sds", "stream-q")
+      sink.ensureTables(schema)
+
+      // run 1: process only some batches, then stop mid-stream ("kill")
+      val src1 = StreamingPipeline.fileSource(spark, srcDir, schema, maxFilesPerTrigger = 1)
+      val q1 = src1.writeStream
+        .foreachBatch((b: DataFrame, id: Long) => sink.writeBatch(b, id))
+        .option("checkpointLocation", ckpt)
+        .trigger(Trigger.ProcessingTime(100))
+        .start()
+      try {
+        val deadline = System.currentTimeMillis() + 30000
+        while (sink.dataCount() < 250 && System.currentTimeMillis() < deadline)
+          Thread.sleep(50)
+      } finally q1.stop()
+      val afterKill = sink.dataCount()
+      assert(afterKill >= 250, s"expected at least one batch landed, got $afterKill")
+
+      // run 2: restart from the same checkpoint -> resumes, replays nothing
+      val q2 = StreamingPipeline.toJdbc(
+        StreamingPipeline.fileSource(spark, srcDir, schema, maxFilesPerTrigger = 1),
+        sink, ckpt, Trigger.AvailableNow())
+      q2.awaitTermination(60000)
+      assert(sink.dataCount() == 1000, s"exactly-once violated: ${sink.dataCount()}")
     }
-    val schema = spark.read.parquet(srcDir).schema
-    val sink = new TransactionalJdbcSink(url, "sds", "stream-q")
-    sink.ensureTables(schema)
-
-    // run 1: process only some batches, then stop mid-stream ("kill")
-    val src1 = StreamingPipeline.fileSource(spark, srcDir, schema, maxFilesPerTrigger = 1)
-    val q1 = src1.writeStream
-      .foreachBatch((b: DataFrame, id: Long) => sink.writeBatch(b, id))
-      .option("checkpointLocation", ckpt)
-      .trigger(Trigger.ProcessingTime(100))
-      .start()
-    try {
-      val deadline = System.currentTimeMillis() + 30000
-      while (sink.dataCount() < 250 && System.currentTimeMillis() < deadline)
-        Thread.sleep(50)
-    } finally q1.stop()
-    val afterKill = sink.dataCount()
-    assert(afterKill >= 250, s"expected at least one batch landed, got $afterKill")
-
-    // run 2: restart from the same checkpoint -> resumes, replays nothing
-    val q2 = StreamingPipeline.toJdbc(
-      StreamingPipeline.fileSource(spark, srcDir, schema, maxFilesPerTrigger = 1),
-      sink, ckpt, Trigger.AvailableNow())
-    q2.awaitTermination(60000)
-    assert(sink.dataCount() == 1000, s"exactly-once violated: ${sink.dataCount()}")
   }
 
   test("a checkpoint keeps its state partition count when the session default " +
@@ -1587,63 +1410,61 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
     import graft.pipeline.{ConfluentAvro, SchemaRegistry}
     val partsKey = "spark.sql.shuffle.partitions"
     val sessionParts = spark.conf.get(partsKey)
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(partsKey, "8")
     try {
-      val tmp = java.nio.file.Files.createTempDirectory("graftckparts")
-      val srcDir = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
-      val url = s"jdbc:derby:$tmp/db;create=true"
-      val avro = SchemaBridge.toAvro(graft.schema.SimpleSchema("ckparts",
-        Seq("key" -> "string", "ts" -> "long", "text" -> "string")))
-      val id = SchemaRegistry.register("ckparts-value", avro)
-      val distinct = 200L; val baseMs = 1704067200000L
-      // file f: `distinct` rows, each framed twice (dedup fodder), event
-      // times inside 200 ms, files an hour apart
-      def rows(f: Int) = spark.range(2 * distinct).select(
-        concat(lit(s"k$f-"), col("id") % distinct).as("key"),
-        (lit(baseMs + f * 3600000L) + col("id") % distinct).as("ts"),
-        concat(lit(s"file$f doc "), col("id") % distinct).as("text"))
-      def land(f: Int): Unit =
-        ConfluentAvro.encode(rows(f), avro, id, 1).coalesce(1)
-          .write.mode("append").parquet(srcDir)
-      def run(): Seq[Int] = {
-        val stream = StreamingPipeline.fileSource(
-          spark, srcDir, spark.read.parquet(srcDir).schema, maxFilesPerTrigger = 1)
-        val deduped = StreamOps.dedupByContent(
-          ConfluentAvro.decodeAuto(stream, "value", avro)
-            .withColumn("event_time", timestamp_millis(col("ts"))),
-          "event_time", watermark = "10 minutes").drop("event_time")
-        val sink = new TransactionalJdbcSink(url, "ckparts", "ckparts-q")
-        sink.ensureTables(deduped.schema)
-        val q = StreamingPipeline.toJdbc(deduped, sink, ckpt)
-        try assert(q.awaitTermination(120000), "stream did not drain")
-        finally q.stop()
-        q.recentProgress.toSeq.flatMap(p => Option(p.stateOperators).toSeq.flatten)
-          .map(_.numShufflePartitions.toInt)
+      withTempDir("graftckparts") { tmp =>
+        val srcDir = s"$tmp/src"; val ckpt = s"$tmp/ckpt"
+        val url = s"jdbc:derby:$tmp/db;create=true"
+        val avro = SchemaBridge.toAvro(graft.schema.SimpleSchema("ckparts",
+          Seq("key" -> "string", "ts" -> "long", "text" -> "string")))
+        val id = SchemaRegistry.register("ckparts-value", avro)
+        val distinct = 200L; val baseMs = 1704067200000L
+        // file f: `distinct` rows, each framed twice (dedup fodder), event
+        // times inside 200 ms, files an hour apart
+        def rows(f: Int) = spark.range(2 * distinct).select(
+          concat(lit(s"k$f-"), col("id") % distinct).as("key"),
+          (lit(baseMs + f * 3600000L) + col("id") % distinct).as("ts"),
+          concat(lit(s"file$f doc "), col("id") % distinct).as("text"))
+        def land(f: Int): Unit =
+          ConfluentAvro.encode(rows(f), avro, id, 1).coalesce(1)
+            .write.mode("append").parquet(srcDir)
+        def run(): Seq[Int] = {
+          val stream = StreamingPipeline.fileSource(
+            spark, srcDir, spark.read.parquet(srcDir).schema, maxFilesPerTrigger = 1)
+          val deduped = StreamOps.dedupByContent(
+            ConfluentAvro.decodeAuto(stream, "value", avro)
+              .withColumn("event_time", timestamp_millis(col("ts"))),
+            "event_time", watermark = "10 minutes").drop("event_time")
+          val sink = new TransactionalJdbcSink(url, "ckparts", "ckparts-q")
+          sink.ensureTables(deduped.schema)
+          val q = StreamingPipeline.toJdbc(deduped, sink, ckpt)
+          try assert(q.awaitTermination(120000), "stream did not drain")
+          finally q.stop()
+          q.recentProgress.toSeq.flatMap(p => Option(p.stateOperators).toSeq.flatten)
+            .map(_.numShufflePartitions.toInt)
+        }
+
+        Seq(0, 1).foreach(land)
+        assert(run().toSet == Set(8), "first run must build its state under the session's 8")
+        spark.conf.set(partsKey, "4")
+        Seq(2, 3).foreach(land)
+        val resumed = run()
+        assert(resumed.nonEmpty && resumed.toSet == Set(8),
+          s"restart must keep the checkpoint's 8 state partitions, saw ${resumed.distinct}")
+
+        val landed = spark.read.format("jdbc")
+          .option("url", url).option("dbtable", """"ckparts"""").load()
+          .select("key", "ts", "text")
+        val expected = (0 until 4).map(rows).reduce(_ union _).distinct()
+        val n = landed.count()
+        assert(n == 4 * distinct, s"lost/duplicated rows: $n")
+        assert(landed.select("key").distinct().count() == 4 * distinct, "duplicate keys landed")
+        assert(landed.exceptAll(expected).isEmpty && expected.exceptAll(landed).isEmpty,
+          "landed set differs from the expected rows")
       }
-
-      Seq(0, 1).foreach(land)
-      assert(run().toSet == Set(8), "first run must build its state under the session's 8")
-      spark.conf.set(partsKey, "4")
-      Seq(2, 3).foreach(land)
-      val resumed = run()
-      assert(resumed.nonEmpty && resumed.toSet == Set(8),
-        s"restart must keep the checkpoint's 8 state partitions, saw ${resumed.distinct}")
-
-      val landed = spark.read.format("jdbc")
-        .option("url", url).option("dbtable", """"ckparts"""").load()
-        .select("key", "ts", "text")
-      val expected = (0 until 4).map(rows).reduce(_ union _).distinct()
-      val n = landed.count()
-      assert(n == 4 * distinct, s"lost/duplicated rows: $n")
-      assert(landed.select("key").distinct().count() == 4 * distinct, "duplicate keys landed")
-      assert(landed.exceptAll(expected).isEmpty && expected.exceptAll(landed).isEmpty,
-        "landed set differs from the expected rows")
     } finally {
       // restore, not unset: unset would drop to Spark's 200, not the builder's 4
       spark.conf.set(partsKey, sessionParts)
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
   }
 
