@@ -2,6 +2,8 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.operators.Artifacts
+
 /** Benchmark main — driver contract: print ONE machine-parseable JSON line.
   *
   * The stdout line carries TOTALS ONLY (metric/value, cold/warm/best totals,
@@ -185,8 +187,7 @@ object Bench {
     // non-drill lanes and merely starts pre-warmed for the 22 drill lanes
     // (best-of-cold/warm is the headline, so that can only firm numbers up).
     val drillFactor = 10
-    val drillDir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft_scale_drill_${drillFactor}x")
+    val drillDir = Artifacts.path(s"scale_drill_${drillFactor}x")
     // a drill crash must surface in failures[] (→ nonzero rc), not just
     // stderr: r7 shipped a green-looking artifact around a crashed drill,
     // and an empty drill result is otherwise indistinguishable from one
@@ -207,17 +208,12 @@ object Bench {
       k -> math.max(prev * Bench.fenceX(k), prev + 0.5)
     }
     val ((drill, drillVolBase, drillVolBig), loadDrill) = HostLoad.around {
-      try ScaleDrill.run(spark, sfDir, drillDir.toString, drillFactor, wallFence)
+      try ScaleDrill.run(spark, sfDir, drillDir, drillFactor, wallFence)
       catch { case e: Throwable =>
         System.err.println(s"[bench] scale drill failed: ${e.getMessage}")
         drillCrash = Some(s"scale_drill:crashed(${e.getClass.getSimpleName})")
         (Seq.empty[(String, Double, Double, Int)], 0L, 0L)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(drillDir)
-      }
+      } finally Artifacts.delete(drillDir)
     }
 
     // q157 serve-scale probe (r17 verdict #7): build the ANN index ONCE at
@@ -408,21 +404,15 @@ object Bench {
     // vol_ratio; recorded (not gated) because the drill gate already
     // covers q116 and a fresh gate needs a round of baseline first.
     val probeFactor = 30
-    val probeDir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), s"graft_text_probe_${probeFactor}x")
+    val probeDir = Artifacts.path(s"text_probe_${probeFactor}x")
     var probeCrash: Option[String] = None
     val ((probeRows, probeVolBase, probeVolBig), loadProbe) = HostLoad.around {
-      try ScaleDrill.textProbe(spark, sfDir, probeDir.toString, probeFactor)
+      try ScaleDrill.textProbe(spark, sfDir, probeDir, probeFactor)
       catch { case e: Throwable =>
         System.err.println(s"[bench] text probe failed: ${e.getMessage}")
         probeCrash = Some(s"text_probe:crashed(${e.getClass.getSimpleName})")
         (Seq.empty[(String, Double, Double, Int)], 0L, 0L)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(probeDir)
-      }
+      } finally Artifacts.delete(probeDir)
     }
     val probeVolRatio = if (probeVolBase > 0) probeVolBig.toDouble / probeVolBase else -1.0
     val probeJson = drillObj(probeRows, s"x$probeFactor")
@@ -445,21 +435,15 @@ object Bench {
     // (t_hi > hi·t_1 = superlinear past any intercept excuse).
     val textGateLo = 10
     val textGateHi = 30
-    val textGateDir = new java.io.File(
-      sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft_text_gate_marginal")
+    val textGateDir = Artifacts.path("text_gate_marginal")
     var textGateCrash: Option[String] = None
     val ((tgRows, tgV1, tgVLo, tgVHi), loadTextGate) = HostLoad.around {
-      try ScaleDrill.textMarginal(spark, sfDir, textGateDir.toString, textGateLo, textGateHi)
+      try ScaleDrill.textMarginal(spark, sfDir, textGateDir, textGateLo, textGateHi)
       catch { case e: Throwable =>
         System.err.println(s"[bench] text gate failed: ${e.getMessage}")
         textGateCrash = Some(s"text_gate:crashed(${e.getClass.getSimpleName})")
         (Seq.empty[(String, Double, Double, Double, Int)], 0L, 0L, 0L)
-      } finally {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-        }
-        rm(textGateDir)
-      }
+      } finally Artifacts.delete(textGateDir)
     }
     val tgVolRatio = if (tgV1 > 0) tgVHi.toDouble / tgV1 else -1.0
     val textGateJson = tgRows.map { case (k, t1, tLo, tHi, p) =>

@@ -616,10 +616,10 @@ object ScaleDrill {
     * Returns (q, bestSec at Q, bestSec at factor·Q). */
   def serveScale(s: SparkSession, sfDir: String, factor: Int = 10,
                  q: Int = 20): (Int, Double, Double) = {
-    import graft.operators.Similarity
+    import graft.operators.{Artifacts, Similarity}
     val e = Tables(s, sfDir, "embeddings").select(col("vec_id"),
       graft.functions.VectorOps.asDouble(col("embedding")).as("v"))
-    val path = Similarity.indexPathFor(sfDir) + "_servescale"
+    val path = Artifacts.path("ann_index", sfDir) + "_servescale"
     Similarity.writeIndex(e, path)
     val idx = Similarity.loadIndex(s, path)
     def queries(n: Int): DataFrame =

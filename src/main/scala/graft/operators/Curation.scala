@@ -56,18 +56,6 @@ import org.apache.spark.sql.functions._
 object Curation {
   final case class StageCount(stage: String, rows: Long)
 
-  /** Deterministic per-(process, SF-agnostic) parent directory for the
-    * curation lanes' intermediate corpus artifacts — the
-    * [[Similarity.indexPathFor]] discipline: the pid keeps concurrent
-    * harness processes apart, the parent carries the pid so the LEAF
-    * table names ("trimmed", "survivors") stay stable for the checked-in
-    * scan budgets, and every call overwrites (no memoization — the
-    * trimmed corpus differs per caller's canary injection, and a stale
-    * artifact must never serve). */
-  private[graft] def curatedPathFor(): String =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_curated_p" + ProcessHandle.current().pid()).toString
-
   /** Materialize `df` as a parquet artifact at `path` (overwrite) and
     * return the table-shaped read of it — the scale-safe replacement for
     * a corpus-sized MEMORY_AND_DISK persist or an eager localCheckpoint
@@ -148,14 +136,17 @@ object Curation {
     // lands the trimmed corpus before the downstream stages — and both
     // consumers read a durable table instead). Raw, un-trimmed input
     // stays un-materialized: it is a plain scan the trim chain pushes its
-    // own projections into.
+    // own projections into. Every call overwrites, never memoized: the
+    // trimmed corpus differs per caller's canary injection, and a stale
+    // artifact must never serve. The leaf names ("trimmed", "survivors")
+    // stay fixed for the checked-in scan budgets.
     val input = if (!exactSubstrTrim) raw
       else materialize(
         Dedup.trimSpans(raw,
             Dedup.exactSubstrSpans(
               raw.filter(nonEmptyPred).select(col("doc_id"), col("text"))))
           .drop("kept_tokens"),
-        curatedPathFor() + "/trimmed")
+        Artifacts.path("curated") + "/trimmed")
     val alpha = length(regexp_replace(col("text"), "[^A-Za-z]", ""))
       .cast("double") / length(col("text"))
     // r17 (r16 verdict #5): ONE narrow tokenized projection — the quality
@@ -629,7 +620,7 @@ object Curation {
     // production pipeline materializes to storage anyway). Same rows,
     // same lineage truncation, durable instead of block-state.
     val survivors = {
-      val p = curatedPathFor() + "/survivors"
+      val p = Artifacts.path("curated") + "/survivors"
       ordered.select(col("doc_id"), col("text"))
         .write.mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(p)
       s.read.parquet(p)

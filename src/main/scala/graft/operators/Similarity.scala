@@ -798,8 +798,8 @@ object Similarity {
     *  - await ALL jobs to completion (success or failure) BEFORE
     *    rethrowing the first failure: fail-fast would return control to
     *    callers that immediately rename/delete/copy the same directories
-    *    (compactIndex's swap, ensureWorkingCopy's rm/cp) while an orphaned
-    *    sibling job is still writing into them. */
+    *    (compactIndex's publish, Artifacts.workingCopy's delete/copy)
+    *    while an orphaned sibling job is still writing into them. */
   private[graft] def awaitWrites(jobs: Seq[() => Unit]): Unit = {
     import scala.concurrent.{Await, Future}
     val pool = java.util.concurrent.Executors.newFixedThreadPool(jobs.size)
@@ -1016,30 +1016,27 @@ object Similarity {
     val M = PqShape.M; val K = PqShape.K; val Dim = PqShape.Dim
     val e = emb(s, dir).select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
-    val base = indexPathFor(dir) + "_sharded"
+    val base = Artifacts.path("ann_index", dir) + "_sharded"
     // shard builds memoized per process (r20 optimization): the gated leg
     // is MERGE ≡ monolithic — shard artifacts are deterministic in the
     // corpus and never mutated (the merge writes only $base/merged), so
     // re-running the lane re-merges and re-serves against the same shard
     // artifacts instead of re-training quantizers and re-encoding both
-    // halves per pass. A fresh process always rebuilds the shards.
-    if (!builtIndexes.contains(base)) this.synchronized {
-      if (!builtIndexes.contains(base)) {
-        // the frozen quantizers fan into four consumers (2 shards × write +
-        // broadcast-encode): persist so training runs once — released by the
-        // harness after the lane materializes (the q50/q153 lifecycle)
-        val cents = ivfCentroids(e, sqrtStride(e))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        val cb = pqCodebook(e, M, K, Dim)
-        // shard builds run CONCURRENTLY — they share nothing but the frozen
-        // (persisted, read-only) quantizers and write disjoint directories,
-        // which is precisely why a production build fans shards across a
-        // cluster; here two driver threads overlap the write jobs
-        awaitWrites(Seq(
-          () => writeIndexWith(e.filter(col("vec_id") % 2 === 0), cents, cb, s"$base/shard0"),
-          () => writeIndexWith(e.filter(col("vec_id") % 2 === 1), cents, cb, s"$base/shard1")))
-        builtIndexes.add(base): Unit
-      }
+    // halves per pass.
+    Artifacts.ensure(base) {
+      // the frozen quantizers fan into four consumers (2 shards × write +
+      // broadcast-encode): persist so training runs once — released by the
+      // harness after the lane materializes (the q50/q153 lifecycle)
+      val cents = ivfCentroids(e, sqrtStride(e))
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val cb = pqCodebook(e, M, K, Dim)
+      // shard builds run CONCURRENTLY — they share nothing but the frozen
+      // (persisted, read-only) quantizers and write disjoint directories,
+      // which is precisely why a production build fans shards across a
+      // cluster; here two driver threads overlap the write jobs
+      awaitWrites(Seq(
+        () => writeIndexWith(e.filter(col("vec_id") % 2 === 0), cents, cb, s"$base/shard0"),
+        () => writeIndexWith(e.filter(col("vec_id") % 2 === 1), cents, cb, s"$base/shard1")))
     }
     mergeIndexes(s, Seq(s"$base/shard0", s"$base/shard1"), s"$base/merged")
     searchIndex(loadIndex(s, s"$base/merged"), q).orderBy("qid", "rnk")
@@ -1063,15 +1060,15 @@ object Similarity {
     val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
     // frozen quantizers fan into base-build + (via the artifact) the
     // append encode: persist so training runs once — the q158 lifecycle
-    val path = indexPathFor(dir) + "_append"
+    val path = Artifacts.path("ann_index", dir) + "_append"
     // base build memoized per process, served to this call as a fresh
-    // file-level copy (ensureWorkingCopy): the gated leg is APPEND ≡
+    // file-level copy (Artifacts.workingCopy): the gated leg is APPEND ≡
     // rebuild — the append must re-run per call against pristine base
     // state (it accretes files), but the base encode itself is
     // deterministic and was re-running identically per lane per pass.
     // Quantizers train on the FULL corpus (the lane contract), the base
     // encodes the 90% slice.
-    ensureWorkingCopy(s, indexPathFor(dir) + "_base90", path) { p =>
+    Artifacts.workingCopy(Artifacts.path("ann_index", dir) + "_base90", path) { p =>
       val cents = ivfCentroids(e, sqrtStride(e))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val cb = pqCodebook(e, M, K, Dim) // persisted internally since r20
@@ -1101,10 +1098,7 @@ object Similarity {
     // excludes deleted rows, then the marker table is dropped. Crash
     // between swap and drop is safe — the anti-join of already-absent ids
     // is a no-op and the next compaction clears the leftover markers.
-    val tombDir = new java.io.File(s"$path/tombstones")
-    val tomb: Option[DataFrame] =
-      if (tombDir.exists()) Some(s.read.parquet(s"$path/tombstones").select("cid"))
-      else None
+    val tomb = tombstonesAt(s, path).map(_.select("cid"))
     def live(d: DataFrame): DataFrame = tomb match {
       case Some(t) => d.join(broadcast(t), Seq("cid"), "left_anti")
       case None => d
@@ -1119,20 +1113,9 @@ object Similarity {
       () => graft.sources.ParquetLayout.writePartitioned(
         codes, s"$path/codes_compacting", Seq("cluster"), Seq("cid")),
       () => writeVectors(vecs, s"$path/vectors_compacting")))
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    def swap(name: String): Unit = {
-      val cur = new java.io.File(s"$path/$name")
-      val next = new java.io.File(s"$path/${name}_compacting")
-      val retired = new java.io.File(s"$path/${name}_retired")
-      rm(retired)
-      require(cur.renameTo(retired) && next.renameTo(cur),
-        s"compactIndex: atomic swap failed for $name under $path")
-      rm(retired)
-    }
-    swap("codes"); swap("vectors")
-    rm(tombDir)
+    for (name <- Seq("codes", "vectors"))
+      Artifacts.publish(s"$path/${name}_compacting", s"$path/$name")
+    Artifacts.delete(s"$path/tombstones")
   }
 
   /** Q160 — append-then-compact ≡ rebuild: the q159 ingest (base build +
@@ -1145,11 +1128,11 @@ object Similarity {
     val M = PqShape.M; val K = PqShape.K; val Dim = PqShape.Dim
     val e = emb(s, dir).select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
-    val path = indexPathFor(dir) + "_compact"
+    val path = Artifacts.path("ann_index", dir) + "_compact"
     // shares q159's pristine base (same quantizers, same 90% slice) via a
     // fresh working copy per call — the gated legs (append, compact,
     // serve) all still compute per call; see q159's rationale
-    ensureWorkingCopy(s, indexPathFor(dir) + "_base90", path) { p =>
+    Artifacts.workingCopy(Artifacts.path("ann_index", dir) + "_base90", path) { p =>
       val cents = ivfCentroids(e, sqrtStride(e))
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       val cb = pqCodebook(e, M, K, Dim) // persisted internally since r20
@@ -1177,20 +1160,17 @@ object Similarity {
   def q165AnnIndexDelete(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir).select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
-    val path = indexPathFor(dir) + "_delete"
+    val path = Artifacts.path("ann_index", dir) + "_delete"
     // the build's Overwrite resets codes/vectors but not the marker table —
     // clear it so a re-run never serves a stale tombstone set
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(s"$path/tombstones"))
+    Artifacts.delete(s"$path/tombstones")
     // build memoized per process (r20 optimization): the gated leg is
     // delete→serve; deleteFromIndex only writes tombstone files (spec-
-    // pinned byte-untouched codes/vectors) and the rm above resets them
-    // per call, so the underlying artifact never needs a rebuild. Own
+    // pinned byte-untouched codes/vectors) and the delete above resets
+    // them per call, so the underlying artifact never needs a rebuild. Own
     // path (not the shared one): the tombstone table must never be
     // visible to the other serve lanes.
-    ensureIndex(s, e, path)
+    Artifacts.ensure(path)(writeIndex(e, path))
     deleteFromIndex(s, path, e.filter(col("vec_id") % 10 === 7).select("vec_id"))
     searchIndex(loadIndex(s, path), q).orderBy("qid", "rnk")
   }
@@ -1233,10 +1213,7 @@ object Similarity {
     * driver state. */
   def retrainIndex(s: SparkSession, path: String): Unit = {
     val M = PqShape.M; val K = PqShape.K; val Dim = PqShape.Dim
-    val tombDir = new java.io.File(s"$path/tombstones")
-    val tomb: Option[DataFrame] =
-      if (tombDir.exists()) Some(s.read.parquet(s"$path/tombstones").select("cid"))
-      else None
+    val tomb = tombstonesAt(s, path).map(_.select("cid"))
     val vecs = s.read.parquet(s"$path/vectors")
     val live0 = tomb match {
       // tombstones are bounded small between compactions (the delete
@@ -1257,15 +1234,7 @@ object Similarity {
       val next = path + "_retraining"
       writeIndexWith(live, cents, cb, next)
       cents.unpersist(); cb.unpersist(): Unit
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-      }
-      val retired = new java.io.File(path + "_retired")
-      rm(retired)
-      require(new java.io.File(path).renameTo(retired) &&
-        new java.io.File(next).renameTo(new java.io.File(path)),
-        s"retrainIndex: artifact swap failed under $path")
-      rm(retired)
+      Artifacts.publish(next, path)
     } finally { live.unpersist(): Unit }
   }
 
@@ -1282,19 +1251,15 @@ object Similarity {
     * must survive the retrain's physical delete. */
   def q176AnnIndexRetrain(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir).select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
-    val path = indexPathFor(dir) + "_retrain"
-    // re-run hygiene: clear any stale tombstones or half-finished swap
-    // state before the base build's Overwrite resets the tables
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(path + "_retraining"))
-    rm(new java.io.File(path + "_retired"))
+    val path = Artifacts.path("ann_index", dir) + "_retrain"
+    // re-run hygiene: clear a half-finished retrain's staged artifact
+    // (publish clears a stale `_retired` itself)
+    Artifacts.delete(path + "_retraining")
     // base build (quantizers on the 90% slice — the drift setup) memoized
     // per process; each call mutates a fresh file-level copy. The copy
-    // replaces the old tombstone rm: a working copy of the pristine base
+    // replaces a tombstone reset: a working copy of the pristine base
     // carries no tombstones by construction.
-    ensureWorkingCopy(s, indexPathFor(dir) + "_base90q176", path) { p =>
+    Artifacts.workingCopy(Artifacts.path("ann_index", dir) + "_base90q176", path) { p =>
       writeIndex(e.filter(col("vec_id") % 10 =!= 7), p)
     }
     appendToIndex(s, path, e.filter(col("vec_id") % 10 === 7))
@@ -1323,8 +1288,8 @@ object Similarity {
     // gated leg here is the filtered SERVE path — the build is identical
     // to q157's and the artifact is never mutated, so a per-lane rebuild
     // into a private "_filtered" copy measured the same build twice
-    val path = indexPathFor(dir)
-    ensureIndex(s, e, path)
+    val path = Artifacts.path("ann_index", dir)
+    Artifacts.ensure(path)(writeIndex(e, path))
     searchIndex(loadIndex(s, path), q, allowed = Some(allowed)).orderBy("qid", "rnk")
   }
 
@@ -1344,8 +1309,8 @@ object Similarity {
     val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
     val allowed = raw.filter(col("label") % 10 === 7).select(col("vec_id").as("cid"))
     // shared artifact, adaptive SERVE gated — the q166 rationale
-    val path = indexPathFor(dir)
-    ensureIndex(s, e, path)
+    val path = Artifacts.path("ann_index", dir)
+    Artifacts.ensure(path)(writeIndex(e, path))
     searchIndex(loadIndex(s, path), q, allowed = Some(allowed),
       adaptiveFloor = Some(RerankR)).orderBy("qid", "rnk")
   }
@@ -1359,10 +1324,11 @@ object Similarity {
     codes = s.read.parquet(s"$path/codes")
       .withColumn("cluster", col("cluster").cast("long")),
     vectors = s.read.parquet(s"$path/vectors"),
-    tombstones =
-      if (new java.io.File(s"$path/tombstones").exists())
-        Some(s.read.parquet(s"$path/tombstones"))
-      else None)
+    tombstones = tombstonesAt(s, path))
+
+  /** The artifact's pending deletes ([[deleteFromIndex]]), if any. */
+  private def tombstonesAt(s: SparkSession, path: String): Option[DataFrame] =
+    Some(s"$path/tombstones").filter(Artifacts.exists).map(s.read.parquet(_))
 
   /** Serve-many half: the q153 probe → ADC → shortlist → exact-rerank
     * pipeline run against a LOADED index — no corpus derivation anywhere.
@@ -1484,79 +1450,6 @@ object Similarity {
     }
   }
 
-  /** Artifact paths this PROCESS already built via [[ensureIndex]] — the
-    * [[graft.operators.Tokenizer.ensureTokenizer]] discipline applied to
-    * the ANN index (r20 optimization): [[writeIndex]] is deterministic in
-    * the corpus, so lanes whose GATED leg is a read-only serve path
-    * (q166 filtered, q171 adaptive) or a mutate-then-serve whose mutation
-    * never touches codes/vectors (q165 tombstones) re-serve one shared
-    * per-(process, SF) artifact instead of re-running the identical
-    * full-corpus build per lane per pass. q157 — the lane that GATES the
-    * build→serve round trip — still builds unconditionally on every call
-    * and feeds this memo, exactly the q168/q170 split. A fresh process
-    * always rebuilds. */
-  private val builtIndexes =
-    java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-
-  /** Build-once-per-(process, path): [[writeIndex]] unless this process
-    * already did. Only for artifacts whose codes/vectors/quantizers are
-    * never mutated afterwards (append/compact/retrain lanes must keep
-    * rebuilding their working copies — their mutations accrete). */
-  def ensureIndex(s: SparkSession, e: DataFrame, path: String): Unit =
-    if (!builtIndexes.contains(path)) this.synchronized {
-      if (!builtIndexes.contains(path)) {
-        writeIndex(e, path)
-        builtIndexes.add(path): Unit
-      }
-    }
-
-  /** [[ensureIndex]] for lanes that MUTATE their artifact (append /
-    * compact / retrain): the deterministic base build lands ONCE per
-    * process under `pristine` (via `build`), and every call receives a
-    * fresh FILE-LEVEL copy of it at `work` — byte-identical to a fresh
-    * build (parquet round-trips bit-exactly and a copy is trivially
-    * byte-preserving), so the gated mutate→serve legs still compute per
-    * call against exactly the state a fresh build would give them, while
-    * the identical base encode no longer re-runs per lane per pass (r20
-    * optimization; at sf0.1 an artifact is ~200 small files — the copy is
-    * ~2 orders cheaper than the build's quantizer train + two encode
-    * passes). */
-  def ensureWorkingCopy(s: SparkSession, pristine: String, work: String)
-                       (build: String => Unit): Unit = {
-    if (!builtIndexes.contains(pristine)) this.synchronized {
-      if (!builtIndexes.contains(pristine)) {
-        build(pristine)
-        builtIndexes.add(pristine): Unit
-      }
-    }
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    def cp(src: java.io.File, dst: java.io.File): Unit = {
-      if (src.isDirectory) {
-        dst.mkdirs()
-        Option(src.listFiles()).foreach(_.foreach(c => cp(c, new java.io.File(dst, c.getName))))
-      } else {
-        java.nio.file.Files.copy(src.toPath, dst.toPath,
-          java.nio.file.StandardCopyOption.REPLACE_EXISTING): Unit
-      }
-    }
-    rm(new java.io.File(work))
-    cp(new java.io.File(pristine), new java.io.File(work))
-  }
-
-  /** Deterministic per-(process, SF) index location for the gated lanes
-    * (rebuilt and overwritten on every run — the lanes grade the ROUND
-    * TRIP, so a stale artifact must never serve). The pid component keeps
-    * two concurrent harness processes on the same host and SF from
-    * overwriting each other's artifact mid-serve (r17 ADVICE #5); within
-    * one process the path is stable, so a lane's own rebuild still
-    * overwrites its previous run's artifact instead of accreting. */
-  private[graft] def indexPathFor(dir: String): String =
-    java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_ann_index_p" + ProcessHandle.current().pid() + "_" +
-        dir.replaceAll("[^A-Za-z0-9]", "_")).toString
-
   /** Q157 — build → persist → load → search: the saved-index serve lane.
     * Output = the loaded-index rerank top-10 per query (qid, cid, rnk,
     * rsim), which must equal the INLINE q153 pipeline's rerank ranking
@@ -1567,12 +1460,11 @@ object Similarity {
   def q157AnnIndexServe(s: SparkSession, dir: String): DataFrame = {
     val e = emb(s, dir).select(col("vec_id"), VectorOps.asDouble(col("embedding")).as("v"))
     val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
-    val path = indexPathFor(dir)
+    val path = Artifacts.path("ann_index", dir)
     // unconditional rebuild — THIS lane gates the build half; the write
-    // feeds the ensureIndex memo so the read-only serve lanes (q166/q171)
-    // re-serve this artifact instead of rebuilding it (r20 optimization)
-    writeIndex(e, path)
-    builtIndexes.add(path)
+    // feeds the memo so the read-only serve lanes (q166/q171) re-serve
+    // this artifact instead of rebuilding it (r20 optimization)
+    Artifacts.build(path)(writeIndex(e, path))
     searchIndex(loadIndex(s, path), q).orderBy("qid", "rnk")
   }
 
@@ -1770,8 +1662,8 @@ object Similarity {
     // persisted ANN index, it does not re-train quantizers per query
     // batch. The oracle and the s155 twin replay the inline math — output
     // is row-identical either way (the q157 ≡ q153 identity).
-    val path = indexPathFor(dir)
-    ensureIndex(s, e, path)
+    val path = Artifacts.path("ann_index", dir)
+    Artifacts.ensure(path)(writeIndex(e, path))
     val vecTop = searchIndex(loadIndex(s, path), q, topK = HybridChan)
       .select(col("qid"), col("cid"), col("rnk").cast("int").as("vec_rank"))
     val fused = kwTop.join(vecTop, Seq("qid", "cid"), "full_outer")

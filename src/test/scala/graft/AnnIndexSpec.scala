@@ -7,6 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Similarity
 import graft.functions.VectorOps
+import graft.TempDirs.withTempDir
 
 /** Build-once / serve-many ANN index (r16 verdict "What's missing #2"):
   *  - round trip: search against the PERSISTED index must equal the inline
@@ -20,16 +21,20 @@ import graft.functions.VectorOps
 class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
   var spark: SparkSession = _
+  var idxDir: java.nio.file.Path = _
   var idxPath: String = _
 
   override def beforeAll(): Unit = {
     spark = GraftSession.builder("local[4]").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    idxPath = java.nio.file.Files.createTempDirectory("graft_ann_idx_spec")
-      .resolve("idx").toString
+    idxDir = java.nio.file.Files.createTempDirectory("graft_ann_idx_spec")
+    idxPath = idxDir.resolve("idx").toString
     Similarity.writeIndex(corpus, idxPath) // built ONCE for the whole spec
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    if (idxDir != null) TempDirs.delete(idxDir)
+  }
 
   private def corpus: DataFrame =
     Tables(spark, sfDir, "embeddings")
@@ -107,35 +112,37 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb = Similarity.pqCodebook(e, 8, 16, 64)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_append").toString
-    Similarity.writeIndexWith(e.filter(col("vec_id") % 10 =!= 7), cents, cb, s"$tmp/apx")
-    // (relative path → (size, mtime)) of every data file in the artifact
-    def listing(root: String): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(root))
-        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-        .map(f => f.getAbsolutePath.stripPrefix(root) ->
-          (f.length(), f.lastModified())).toMap
+    withTempDir("graft_ann_append") { tmpPath =>
+      val tmp = tmpPath.toString
+      Similarity.writeIndexWith(e.filter(col("vec_id") % 10 =!= 7), cents, cb, s"$tmp/apx")
+      // (relative path → (size, mtime)) of every data file in the artifact
+      def listing(root: String): Map[String, (Long, Long)] = {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+          else Seq(f)
+        walk(new java.io.File(root))
+          .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+          .map(f => f.getAbsolutePath.stripPrefix(root) ->
+            (f.length(), f.lastModified())).toMap
+      }
+      val before = listing(s"$tmp/apx")
+      Similarity.appendToIndex(spark, s"$tmp/apx", e.filter(col("vec_id") % 10 === 7))
+      val after = listing(s"$tmp/apx")
+      before.foreach { case (path, stamp) =>
+        assert(after.get(path).contains(stamp),
+          s"append rewrote an existing shard file: $path")
+      }
+      assert(after.size > before.size, "append landed no new files")
+      // appended ≡ rebuilt: same frozen quantizers, union corpus
+      Similarity.writeIndexWith(e, cents, cb, s"$tmp/mono")
+      val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
+      def serve(p: String) =
+        Similarity.searchIndex(Similarity.loadIndex(spark, p), q).orderBy("qid", "rnk")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+      assert(serve(s"$tmp/apx") == serve(s"$tmp/mono"),
+        "appended-index search diverged from the monolithic rebuild")
+      GraftSession.releasePersisted(spark)
     }
-    val before = listing(s"$tmp/apx")
-    Similarity.appendToIndex(spark, s"$tmp/apx", e.filter(col("vec_id") % 10 === 7))
-    val after = listing(s"$tmp/apx")
-    before.foreach { case (path, stamp) =>
-      assert(after.get(path).contains(stamp),
-        s"append rewrote an existing shard file: $path")
-    }
-    assert(after.size > before.size, "append landed no new files")
-    // appended ≡ rebuilt: same frozen quantizers, union corpus
-    Similarity.writeIndexWith(e, cents, cb, s"$tmp/mono")
-    val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
-    def serve(p: String) =
-      Similarity.searchIndex(Similarity.loadIndex(spark, p), q).orderBy("qid", "rnk")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    assert(serve(s"$tmp/apx") == serve(s"$tmp/mono"),
-      "appended-index search diverged from the monolithic rebuild")
-    GraftSession.releasePersisted(spark)
   }
 
   test("compaction collapses append-accreted files and is search-identical " +
@@ -145,36 +152,38 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb = Similarity.pqCodebook(e, 8, 16, 64)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_compact").toString
-    Similarity.writeIndexWith(e.filter(col("vec_id") % 4 === 0), cents, cb, s"$tmp/idx")
-    // three appends — the streaming-accretion shape: one file per
-    // (cluster, batch) piles up in the hot cluster directories
-    (1 to 3).foreach(k =>
-      Similarity.appendToIndex(spark, s"$tmp/idx", e.filter(col("vec_id") % 4 === k)))
-    def dataFiles(p: String): Int = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(p))
-        .count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+    withTempDir("graft_ann_compact") { tmpPath =>
+      val tmp = tmpPath.toString
+      Similarity.writeIndexWith(e.filter(col("vec_id") % 4 === 0), cents, cb, s"$tmp/idx")
+      // three appends — the streaming-accretion shape: one file per
+      // (cluster, batch) piles up in the hot cluster directories
+      (1 to 3).foreach(k =>
+        Similarity.appendToIndex(spark, s"$tmp/idx", e.filter(col("vec_id") % 4 === k)))
+      def dataFiles(p: String): Int = {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+          else Seq(f)
+        walk(new java.io.File(p))
+          .count(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      }
+      val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
+      def serve() =
+        Similarity.searchIndex(Similarity.loadIndex(spark, s"$tmp/idx"), q)
+          .orderBy("qid", "rnk")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+      val beforeFiles = dataFiles(s"$tmp/idx/codes")
+      val beforeRows = serve()
+      Similarity.compactIndex(spark, s"$tmp/idx")
+      val afterFiles = dataFiles(s"$tmp/idx/codes")
+      assert(afterFiles < beforeFiles,
+        s"compaction did not reduce code files: $beforeFiles -> $afterFiles")
+      assert(serve() == beforeRows, "compaction changed search results")
+      // no leftover side/retired directories — the swap completed
+      val names = Option(new java.io.File(s"$tmp/idx").listFiles()).toSeq.flatten.map(_.getName)
+      assert(!names.exists(n => n.contains("compacting") || n.contains("retired")),
+        s"compaction left transient dirs: $names")
+      GraftSession.releasePersisted(spark)
     }
-    val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
-    def serve() =
-      Similarity.searchIndex(Similarity.loadIndex(spark, s"$tmp/idx"), q)
-        .orderBy("qid", "rnk")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    val beforeFiles = dataFiles(s"$tmp/idx/codes")
-    val beforeRows = serve()
-    Similarity.compactIndex(spark, s"$tmp/idx")
-    val afterFiles = dataFiles(s"$tmp/idx/codes")
-    assert(afterFiles < beforeFiles,
-      s"compaction did not reduce code files: $beforeFiles -> $afterFiles")
-    assert(serve() == beforeRows, "compaction changed search results")
-    // no leftover side/retired directories — the swap completed
-    val names = Option(new java.io.File(s"$tmp/idx").listFiles()).toSeq.flatten.map(_.getName)
-    assert(!names.exists(n => n.contains("compacting") || n.contains("retired")),
-      s"compaction left transient dirs: $names")
-    GraftSession.releasePersisted(spark)
   }
 
   test("streaming ingest appends compose: foreachBatch micro-batch appends " +
@@ -187,29 +196,31 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb = Similarity.pqCodebook(e, 8, 16, 64)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_sappend").toString
-    Similarity.writeIndexWith(e.filter(col("vec_id") % 5 =!= 3), cents, cb, s"$tmp/idx")
-    val arriving = e.filter(col("vec_id") % 5 === 3)
-      .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
-    val (h1, h2) = arriving.splitAt(arriving.size / 2)
-    val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
-    val query = ms.toDS().toDF("vec_id", "v").writeStream
-      .option("checkpointLocation", s"$tmp/ckpt")
-      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-        if (!b.isEmpty) Similarity.appendToIndex(sp, s"$tmp/idx", b)
-      }
-      .start()
-    ms.addData(h1); query.processAllAvailable()
-    ms.addData(h2); query.processAllAvailable()
-    query.stop()
-    Similarity.writeIndexWith(e, cents, cb, s"$tmp/mono")
-    val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
-    def serve(p: String) =
-      Similarity.searchIndex(Similarity.loadIndex(spark, p), q).orderBy("qid", "rnk")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    assert(serve(s"$tmp/idx") == serve(s"$tmp/mono"),
-      "micro-batch-appended index diverged from the monolithic rebuild")
-    GraftSession.releasePersisted(spark)
+    withTempDir("graft_ann_sappend") { tmpPath =>
+      val tmp = tmpPath.toString
+      Similarity.writeIndexWith(e.filter(col("vec_id") % 5 =!= 3), cents, cb, s"$tmp/idx")
+      val arriving = e.filter(col("vec_id") % 5 === 3)
+        .collect().map(r => (r.getLong(0), r.getSeq[Double](1))).toSeq
+      val (h1, h2) = arriving.splitAt(arriving.size / 2)
+      val ms = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Seq[Double])]
+      val query = ms.toDS().toDF("vec_id", "v").writeStream
+        .option("checkpointLocation", s"$tmp/ckpt")
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+          if (!b.isEmpty) Similarity.appendToIndex(sp, s"$tmp/idx", b)
+        }
+        .start()
+      ms.addData(h1); query.processAllAvailable()
+      ms.addData(h2); query.processAllAvailable()
+      query.stop()
+      Similarity.writeIndexWith(e, cents, cb, s"$tmp/mono")
+      val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
+      def serve(p: String) =
+        Similarity.searchIndex(Similarity.loadIndex(spark, p), q).orderBy("qid", "rnk")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+      assert(serve(s"$tmp/idx") == serve(s"$tmp/mono"),
+        "micro-batch-appended index diverged from the monolithic rebuild")
+      GraftSession.releasePersisted(spark)
+    }
   }
 
   test("sharded build + merge ≡ the monolithic artifact (q158 ≡ q157)") {
@@ -223,18 +234,20 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("mergeIndexes refuses shards encoded against different quantizers") {
     val e = corpus
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_merge_bad").toString
-    val cents = Similarity.ivfCentroids(e, Similarity.sqrtStride(e))
-    val cb = Similarity.pqCodebook(e, 8, 16, 64)
-    // a SECOND, different quantizer family: different stride → different
-    // centroid table (codes under it are incompatible by construction)
-    val cents2 = Similarity.ivfCentroids(e, Similarity.sqrtStride(e) + 1)
-    Similarity.writeIndexWith(e.filter(col("vec_id") % 2 === 0), cents, cb, s"$tmp/a")
-    Similarity.writeIndexWith(e.filter(col("vec_id") % 2 === 1), cents2, cb, s"$tmp/b")
-    val err = intercept[IllegalArgumentException] {
-      Similarity.mergeIndexes(spark, Seq(s"$tmp/a", s"$tmp/b"), s"$tmp/out")
+    withTempDir("graft_ann_merge_bad") { tmpPath =>
+      val tmp = tmpPath.toString
+      val cents = Similarity.ivfCentroids(e, Similarity.sqrtStride(e))
+      val cb = Similarity.pqCodebook(e, 8, 16, 64)
+      // a SECOND, different quantizer family: different stride → different
+      // centroid table (codes under it are incompatible by construction)
+      val cents2 = Similarity.ivfCentroids(e, Similarity.sqrtStride(e) + 1)
+      Similarity.writeIndexWith(e.filter(col("vec_id") % 2 === 0), cents, cb, s"$tmp/a")
+      Similarity.writeIndexWith(e.filter(col("vec_id") % 2 === 1), cents2, cb, s"$tmp/b")
+      val err = intercept[IllegalArgumentException] {
+        Similarity.mergeIndexes(spark, Seq(s"$tmp/a", s"$tmp/b"), s"$tmp/out")
+      }
+      assert(err.getMessage.contains("centroid tables differ"))
     }
-    assert(err.getMessage.contains("centroid tables differ"))
   }
 
   test("a loaded index serves EXTERNAL query vectors (not corpus members)") {
@@ -276,53 +289,55 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val cb = Similarity.pqCodebook(e, 8, 16, 64)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_delete").toString
-    Similarity.writeIndexWith(e, cents, cb, s"$tmp/full")
-    def listing(root: String): Map[String, (Long, Long)] = {
-      def walk(f: java.io.File): Seq[java.io.File] =
-        if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
-        else Seq(f)
-      walk(new java.io.File(root))
-        .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
-        .map(f => f.getAbsolutePath.stripPrefix(root) ->
-          (f.length(), f.lastModified())).toMap
+    withTempDir("graft_ann_delete") { tmpPath =>
+      val tmp = tmpPath.toString
+      Similarity.writeIndexWith(e, cents, cb, s"$tmp/full")
+      def listing(root: String): Map[String, (Long, Long)] = {
+        def walk(f: java.io.File): Seq[java.io.File] =
+          if (f.isDirectory) Option(f.listFiles()).toSeq.flatten.flatMap(walk)
+          else Seq(f)
+        walk(new java.io.File(root))
+          .filterNot(f => f.getName.startsWith("_") || f.getName.startsWith("."))
+          .map(f => f.getAbsolutePath.stripPrefix(root) ->
+            (f.length(), f.lastModified())).toMap
+      }
+      // 1. the delete writes ONLY tombstone files — codes/vectors untouched,
+      //    so serve cost cannot grow with deletions (r18 Next #4's file pin)
+      val beforeCodes = listing(s"$tmp/full/codes")
+      val beforeVecs = listing(s"$tmp/full/vectors")
+      Similarity.deleteFromIndex(spark, s"$tmp/full",
+        e.filter(col("vec_id") % 10 === 7).select("vec_id"))
+      assert(listing(s"$tmp/full/codes") == beforeCodes, "delete touched codes files")
+      assert(listing(s"$tmp/full/vectors") == beforeVecs, "delete touched vector files")
+      assert(new java.io.File(s"$tmp/full/tombstones").exists(), "no tombstone table")
+      // 2. delete→serve ≡ rebuild over the remaining rows under the SAME
+      //    frozen quantizers
+      Similarity.writeIndexWith(e.filter(col("vec_id") % 10 =!= 7), cents, cb, s"$tmp/rebuilt")
+      val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
+      def serve(p: String) =
+        Similarity.searchIndex(Similarity.loadIndex(spark, p), q).orderBy("qid", "rnk")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+      val tombstoned = serve(s"$tmp/full")
+      assert(tombstoned == serve(s"$tmp/rebuilt"),
+        "tombstoned serve diverged from the rebuild-without-rows")
+      // the delete is not vacuous: some deleted cid was in the pre-delete top-10
+      val deletedSet = e.filter(col("vec_id") % 10 === 7)
+        .select("vec_id").collect().map(_.getLong(0)).toSet
+      assert(tombstoned.forall(r => !deletedSet.contains(r._2)),
+        "a deleted cid surfaced in the served results")
+      // 3. compaction applies tombstones physically and clears the marker
+      //    table; serve is identical before/after
+      Similarity.compactIndex(spark, s"$tmp/full")
+      assert(!new java.io.File(s"$tmp/full/tombstones").exists(),
+        "compaction left the tombstone table behind")
+      val compacted = Similarity.loadIndex(spark, s"$tmp/full")
+      assert(compacted.tombstones.isEmpty)
+      val leftover = compacted.codes.filter(col("cid") % 10 === 7).count()
+      assert(leftover == 0L, s"compaction kept $leftover tombstoned code rows")
+      assert(serve(s"$tmp/full") == tombstoned,
+        "compaction changed the served ranking")
+      GraftSession.releasePersisted(spark)
     }
-    // 1. the delete writes ONLY tombstone files — codes/vectors untouched,
-    //    so serve cost cannot grow with deletions (r18 Next #4's file pin)
-    val beforeCodes = listing(s"$tmp/full/codes")
-    val beforeVecs = listing(s"$tmp/full/vectors")
-    Similarity.deleteFromIndex(spark, s"$tmp/full",
-      e.filter(col("vec_id") % 10 === 7).select("vec_id"))
-    assert(listing(s"$tmp/full/codes") == beforeCodes, "delete touched codes files")
-    assert(listing(s"$tmp/full/vectors") == beforeVecs, "delete touched vector files")
-    assert(new java.io.File(s"$tmp/full/tombstones").exists(), "no tombstone table")
-    // 2. delete→serve ≡ rebuild over the remaining rows under the SAME
-    //    frozen quantizers
-    Similarity.writeIndexWith(e.filter(col("vec_id") % 10 =!= 7), cents, cb, s"$tmp/rebuilt")
-    val q = e.filter(col("vec_id") < 20).toDF("qid", "qv")
-    def serve(p: String) =
-      Similarity.searchIndex(Similarity.loadIndex(spark, p), q).orderBy("qid", "rnk")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    val tombstoned = serve(s"$tmp/full")
-    assert(tombstoned == serve(s"$tmp/rebuilt"),
-      "tombstoned serve diverged from the rebuild-without-rows")
-    // the delete is not vacuous: some deleted cid was in the pre-delete top-10
-    val deletedSet = e.filter(col("vec_id") % 10 === 7)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    assert(tombstoned.forall(r => !deletedSet.contains(r._2)),
-      "a deleted cid surfaced in the served results")
-    // 3. compaction applies tombstones physically and clears the marker
-    //    table; serve is identical before/after
-    Similarity.compactIndex(spark, s"$tmp/full")
-    assert(!new java.io.File(s"$tmp/full/tombstones").exists(),
-      "compaction left the tombstone table behind")
-    val compacted = Similarity.loadIndex(spark, s"$tmp/full")
-    assert(compacted.tombstones.isEmpty)
-    val leftover = compacted.codes.filter(col("cid") % 10 === 7).count()
-    assert(leftover == 0L, s"compaction kept $leftover tombstoned code rows")
-    assert(serve(s"$tmp/full") == tombstoned,
-      "compaction changed the served ranking")
-    GraftSession.releasePersisted(spark)
   }
 
   test("filtered search (q166): every result satisfies the predicate and is " +
@@ -440,66 +455,70 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val allowedDf = raw.filter(col("label") % 10 === 7).select(col("vec_id").as("cid"))
     val allowedIds = allowedDf.collect().map(_.getLong(0)).toSet
     // a fresh artifact so the spec-wide index keeps no tombstones
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_del_adapt").toString
-    Similarity.writeIndex(e, s"$tmp/idx")
-    def probesOf(): Map[Long, Long] =
-      Similarity.searchIndex(Similarity.loadIndex(spark, s"$tmp/idx"), q,
+    withTempDir("graft_ann_del_adapt") { tmpPath =>
+      val tmp = tmpPath.toString
+      Similarity.writeIndex(e, s"$tmp/idx")
+      def probesOf(): Map[Long, Long] =
+        Similarity.searchIndex(Similarity.loadIndex(spark, s"$tmp/idx"), q,
+            allowed = Some(allowedDf), adaptiveFloor = Some(Similarity.RerankR))
+          .select("qid", "n_probes").distinct().collect()
+          .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val before = probesOf()
+      // delete HALF the allowed set: live allowed candidates per cluster drop,
+      // so the documented floor semantics ("live allowed candidates") require
+      // probe counts to be >= the pre-delete counts for every query
+      val victims = allowedIds.toSeq.sorted.take(allowedIds.size / 2)
+      assert(victims.nonEmpty)
+      Similarity.deleteFromIndex(spark, s"$tmp/idx",
+        e.filter(col("vec_id").isInCollection(victims)).select("vec_id"))
+      val after = Similarity.searchIndex(Similarity.loadIndex(spark, s"$tmp/idx"), q,
           allowed = Some(allowedDf), adaptiveFloor = Some(Similarity.RerankR))
-        .select("qid", "n_probes").distinct().collect()
-        .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val before = probesOf()
-    // delete HALF the allowed set: live allowed candidates per cluster drop,
-    // so the documented floor semantics ("live allowed candidates") require
-    // probe counts to be >= the pre-delete counts for every query
-    val victims = allowedIds.toSeq.sorted.take(allowedIds.size / 2)
-    assert(victims.nonEmpty)
-    Similarity.deleteFromIndex(spark, s"$tmp/idx",
-      e.filter(col("vec_id").isInCollection(victims)).select("vec_id"))
-    val after = Similarity.searchIndex(Similarity.loadIndex(spark, s"$tmp/idx"), q,
-        allowed = Some(allowedDf), adaptiveFloor = Some(Similarity.RerankR))
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1), r.getLong(4)))
-    assert(after.nonEmpty)
-    assert(after.forall(r => !victims.contains(r._2)),
-      "a deleted id surfaced in adaptive filtered serve")
-    assert(after.forall(r => allowedIds.contains(r._2)))
-    val afterProbes = after.map(r => r._1 -> r._3).toMap
-    afterProbes.foreach { case (qid, np) =>
-      assert(np >= before.getOrElse(qid, PqShape.NProbe.toLong),
-        s"query $qid probed FEWER clusters after deleting filter members — " +
-          "the floor is counting dead candidates")
+        .collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getLong(4)))
+      assert(after.nonEmpty)
+      assert(after.forall(r => !victims.contains(r._2)),
+        "a deleted id surfaced in adaptive filtered serve")
+      assert(after.forall(r => allowedIds.contains(r._2)))
+      val afterProbes = after.map(r => r._1 -> r._3).toMap
+      afterProbes.foreach { case (qid, np) =>
+        assert(np >= before.getOrElse(qid, PqShape.NProbe.toLong),
+          s"query $qid probed FEWER clusters after deleting filter members — " +
+            "the floor is counting dead candidates")
+      }
+      GraftSession.releasePersisted(spark)
     }
-    GraftSession.releasePersisted(spark)
   }
 
   test("quantizer refresh (q176): retrainIndex ≡ a fresh build over the " +
       "live rows, tombstones applied physically, swap scaffolding gone") {
     val e = corpus
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_retrain_id").toString
-    // churn: full build, delete a slice, retrain
-    Similarity.writeIndex(e, s"$tmp/idx")
-    Similarity.deleteFromIndex(spark, s"$tmp/idx",
-      e.filter(col("vec_id") % 10 === 3).select("vec_id"))
-    Similarity.retrainIndex(spark, s"$tmp/idx")
-    // the determinism contract: quantizer training is a pure function of
-    // the live row SET, so the retrained artifact must serve identically
-    // to a from-scratch build over exactly those rows
-    val live = e.filter(col("vec_id") % 10 =!= 3)
-    Similarity.writeIndex(live, s"$tmp/fresh")
-    val q = live.filter(col("vec_id") < 20).toDF("qid", "qv")
-    def servedOf(p: String) =
-      Similarity.searchIndex(Similarity.loadIndex(spark, p), q)
-        .orderBy("qid", "rnk")
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
-    assert(servedOf(s"$tmp/idx") == servedOf(s"$tmp/fresh"),
-      "retrained serve diverged from a fresh build over the live rows")
-    // deletes were applied physically and the publish scaffolding cleaned up
-    assert(!new java.io.File(s"$tmp/idx/tombstones").exists(),
-      "retrain left tombstones behind — deletes must be applied physically")
-    assert(!new java.io.File(s"$tmp/idx_retraining").exists() &&
-      !new java.io.File(s"$tmp/idx_retired").exists(),
-      "retrain left swap scaffolding behind")
-    GraftSession.releasePersisted(spark)
+    withTempDir("graft_ann_retrain_id") { tmpPath =>
+      val tmp = tmpPath.toString
+      // churn: full build, delete a slice, retrain
+      Similarity.writeIndex(e, s"$tmp/idx")
+      Similarity.deleteFromIndex(spark, s"$tmp/idx",
+        e.filter(col("vec_id") % 10 === 3).select("vec_id"))
+      Similarity.retrainIndex(spark, s"$tmp/idx")
+      // the determinism contract: quantizer training is a pure function of
+      // the live row SET, so the retrained artifact must serve identically
+      // to a from-scratch build over exactly those rows
+      val live = e.filter(col("vec_id") % 10 =!= 3)
+      Similarity.writeIndex(live, s"$tmp/fresh")
+      val q = live.filter(col("vec_id") < 20).toDF("qid", "qv")
+      def servedOf(p: String) =
+        Similarity.searchIndex(Similarity.loadIndex(spark, p), q)
+          .orderBy("qid", "rnk")
+          .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+      assert(servedOf(s"$tmp/idx") == servedOf(s"$tmp/fresh"),
+        "retrained serve diverged from a fresh build over the live rows")
+      // deletes were applied physically and the publish scaffolding cleaned up
+      assert(!new java.io.File(s"$tmp/idx/tombstones").exists(),
+        "retrain left tombstones behind — deletes must be applied physically")
+      assert(!new java.io.File(s"$tmp/idx_retraining").exists() &&
+        !new java.io.File(s"$tmp/idx_retired").exists(),
+        "retrain left swap scaffolding behind")
+      GraftSession.releasePersisted(spark)
+    }
   }
 
   test("quantizer refresh under CORPUS TURNOVER: aging out the training " +
@@ -527,43 +546,45 @@ class AnnIndexSpec extends AnyFunSuite with BeforeAndAfterAll {
     val aIds = 0L until 300L
     val bIds = 300L until 500L
     def mk(ids: Seq[Long]) = ids.map(i => (i, vec(i))).toDF("vec_id", "v")
-    val tmp = java.nio.file.Files.createTempDirectory("graft_ann_retrain_drift").toString
-    val path = s"$tmp/idx"
-    Similarity.writeIndex(mk(aIds), path)           // quantizers trained on gen-A
-    Similarity.appendToIndex(spark, path, mk(bIds)) // gen-B encoded against them
-    Similarity.deleteFromIndex(spark, path,         // gen-A ages out (anchors stay)
-      mk(aIds.filter(_ >= 16)).select("vec_id"))
-    val liveIds = (0L until 16L) ++ bIds
-    val liveVecs = liveIds.map(i => i -> vec(i)).toMap
-    val qIds = bIds.filter(_ % 10 == 0)
-    val qDf = qIds.map(i => (i, vec(i))).toDF("qid", "qv")
-    // recall@10 against the exact rounded-cosine ranking over the live set
-    // (the serve tie contract: rsim DESC, cid)
-    def cosine(a: Array[Double], b: Array[Double]): Double = {
-      var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
-      dot / (math.sqrt(na) * math.sqrt(nb))
+    withTempDir("graft_ann_retrain_drift") { tmpPath =>
+      val tmp = tmpPath.toString
+      val path = s"$tmp/idx"
+      Similarity.writeIndex(mk(aIds), path)           // quantizers trained on gen-A
+      Similarity.appendToIndex(spark, path, mk(bIds)) // gen-B encoded against them
+      Similarity.deleteFromIndex(spark, path,         // gen-A ages out (anchors stay)
+        mk(aIds.filter(_ >= 16)).select("vec_id"))
+      val liveIds = (0L until 16L) ++ bIds
+      val liveVecs = liveIds.map(i => i -> vec(i)).toMap
+      val qIds = bIds.filter(_ % 10 == 0)
+      val qDf = qIds.map(i => (i, vec(i))).toDF("qid", "qv")
+      // recall@10 against the exact rounded-cosine ranking over the live set
+      // (the serve tie contract: rsim DESC, cid)
+      def cosine(a: Array[Double], b: Array[Double]): Double = {
+        var dot = 0.0; var na = 0.0; var nb = 0.0; var i = 0
+        while (i < a.length) { dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i); i += 1 }
+        dot / (math.sqrt(na) * math.sqrt(nb))
+      }
+      val truth: Map[Long, Set[Long]] = qIds.map { qid =>
+        val top = liveIds.filter(_ != qid)
+          .map(c => (BigDecimal(cosine(liveVecs(qid), liveVecs(c)))
+            .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble, c))
+          .sortBy { case (s, c) => (-s, c) }.take(10).map(_._2).toSet
+        qid -> top
+      }.toMap
+      def recallOf(): Double = {
+        val served = Similarity.searchIndex(Similarity.loadIndex(spark, path), qDf)
+          .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1)))
+        val hits = served.count { case (qid, cid) => truth(qid).contains(cid) }
+        hits.toDouble / (qIds.size * 10)
+      }
+      val before = recallOf()
+      Similarity.retrainIndex(spark, path)
+      val after = recallOf()
+      assert(after > before,
+        f"retrain did not improve drifted recall: before=$before%.3f after=$after%.3f")
+      assert(after >= 0.5,
+        f"retrained recall $after%.3f below the 0.5 floor — refresh is not recovering")
+      GraftSession.releasePersisted(spark)
     }
-    val truth: Map[Long, Set[Long]] = qIds.map { qid =>
-      val top = liveIds.filter(_ != qid)
-        .map(c => (BigDecimal(cosine(liveVecs(qid), liveVecs(c)))
-          .setScale(4, BigDecimal.RoundingMode.HALF_UP).toDouble, c))
-        .sortBy { case (s, c) => (-s, c) }.take(10).map(_._2).toSet
-      qid -> top
-    }.toMap
-    def recallOf(): Double = {
-      val served = Similarity.searchIndex(Similarity.loadIndex(spark, path), qDf)
-        .select("qid", "cid").collect().map(r => (r.getLong(0), r.getLong(1)))
-      val hits = served.count { case (qid, cid) => truth(qid).contains(cid) }
-      hits.toDouble / (qIds.size * 10)
-    }
-    val before = recallOf()
-    Similarity.retrainIndex(spark, path)
-    val after = recallOf()
-    assert(after > before,
-      f"retrain did not improve drifted recall: before=$before%.3f after=$after%.3f")
-    assert(after >= 0.5,
-      f"retrained recall $after%.3f below the 0.5 floor — refresh is not recovering")
-    GraftSession.releasePersisted(spark)
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs.withTempDir
+
 /** Red-path coverage for the bench-side scan gate (r14 verdict #7): the
   * `collected < budgeted` loud-fail at Bench's scan-gate phase had no spec
   * driving it — VerifyHardeningSpec covers Verify's analog, but a fence
@@ -41,19 +43,21 @@ class BenchGateSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("sf1GateCommit reads the artifact's _meta stamp and degrades to 'absent'") {
-    val dir = java.nio.file.Files.createTempDirectory("sf1meta").toFile
-    def write(name: String, body: String): String = {
-      val f = new java.io.File(dir, name)
-      java.nio.file.Files.writeString(f.toPath, body)
-      f.getPath
+    withTempDir("sf1meta") { dirPath =>
+      val dir = dirPath.toFile
+      def write(name: String, body: String): String = {
+        val f = new java.io.File(dir, name)
+        java.nio.file.Files.writeString(f.toPath, body)
+        f.getPath
+      }
+      assert(Bench.sf1GateCommit(new java.io.File(dir, "missing.json").getPath) == "absent")
+      // pre-stamp format (the r12-era artifact had no _meta block)
+      assert(Bench.sf1GateCommit(write("old.json",
+        """{"q01":{"hash_match":true}}""")) == "absent")
+      assert(Bench.sf1GateCommit(write("bad.json", "not json")) == "absent")
+      assert(Bench.sf1GateCommit(write("cur.json",
+        """{"q01":{"hash_match":true},"_meta":{"sf1_head_commit":"abc123"}}""")) == "abc123")
     }
-    assert(Bench.sf1GateCommit(new java.io.File(dir, "missing.json").getPath) == "absent")
-    // pre-stamp format (the r12-era artifact had no _meta block)
-    assert(Bench.sf1GateCommit(write("old.json",
-      """{"q01":{"hash_match":true}}""")) == "absent")
-    assert(Bench.sf1GateCommit(write("bad.json", "not json")) == "absent")
-    assert(Bench.sf1GateCommit(write("cur.json",
-      """{"q01":{"hash_match":true},"_meta":{"sf1_head_commit":"abc123"}}""")) == "abc123")
   }
 
   test("an over-budget lane is named with its table and counts") {

@@ -6,6 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Classifier
+import graft.TempDirs.withTempDir
 
 /** Ground-truth checks for the Naive-Bayes quality classifier (q169)
   * against a NAIVE in-memory retraining — independent third spelling next
@@ -138,22 +139,23 @@ class ClassifierSpec extends AnyFunSuite with BeforeAndAfterAll {
       "and the loaded driver-side NbModel equals the in-session trainer") {
     val rows = sep ++ Seq((501L, "zq unseen mixture 123"), (502L, "alpha beta"))
     val df = docsDf(rows)
-    val path = java.nio.file.Files
-      .createTempDirectory("graft_nb_model_spec").toString
-    Classifier.writeModel(spark, df, path)
-    // artifact-served scoring ≡ inline scoring, every column
-    val (lo, scalars) = Classifier.loadModelFrames(spark, path)
-    val served = Classifier.scoreWith(df, lo, scalars)
-      .collect().map(_.toSeq).toSeq
-    val inline = Classifier.nbQualityClassifier(df)
-      .collect().map(_.toSeq).toSeq
-    assert(served == inline, "artifact-served scores diverged from inline")
-    // the collected streaming model round-trips too (loadModel reads the
-    // SAME artifact the stream deploy path uses)
-    assert(Classifier.loadModel(spark, path) == Classifier.trainModel(df))
-    // artifact shape: vocab-sized log-odds + one scalars row
-    assert(scalars.count() == 1)
-    assert(lo.columns.sorted.toSeq == Seq("loq", "tok"))
-    GraftSession.releasePersisted(spark)
+    withTempDir("graft_nb_model_spec") { dir =>
+      val path = dir.toString
+      Classifier.writeModel(spark, df, path)
+      // artifact-served scoring ≡ inline scoring, every column
+      val (lo, scalars) = Classifier.loadModelFrames(spark, path)
+      val served = Classifier.scoreWith(df, lo, scalars)
+        .collect().map(_.toSeq).toSeq
+      val inline = Classifier.nbQualityClassifier(df)
+        .collect().map(_.toSeq).toSeq
+      assert(served == inline, "artifact-served scores diverged from inline")
+      // the collected streaming model round-trips too (loadModel reads the
+      // SAME artifact the stream deploy path uses)
+      assert(Classifier.loadModel(spark, path) == Classifier.trainModel(df))
+      // artifact shape: vocab-sized log-odds + one scalars row
+      assert(scalars.count() == 1)
+      assert(lo.columns.sorted.toSeq == Seq("loq", "tok"))
+      GraftSession.releasePersisted(spark)
+    }
   }
 }

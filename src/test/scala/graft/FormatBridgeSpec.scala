@@ -24,10 +24,7 @@ class FormatBridgeSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
   override def afterAll(): Unit = {
     if (spark != null) spark.stop()
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    if (base != null) rm(new java.io.File(base))
+    if (base != null) TempDirs.delete(java.nio.file.Paths.get(base))
   }
 
   for (table <- Seq("lineitem", "events", "documents");

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs.withTempDir
+
 /** Scalar-function extension surface without test-data columns (SURVEY
   * §2.3.8): map functions over constructed maps, from_json over the events
   * props column. */
@@ -67,13 +69,14 @@ class FunctionsSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("JSON scan (R1): schema'd spark.read.json round-trips a table sample") {
-    val tmp = java.nio.file.Files.createTempDirectory("graftjson")
-    val src = Tables(spark, sfDir, "nation")
-    src.coalesce(1).write.mode("overwrite").json(s"$tmp/nation_json")
-    val back = spark.read.schema(src.schema).json(s"$tmp/nation_json")
-    assert(back.count() == src.count())
-    assert(back.orderBy("n_nationkey").collect().toSeq ==
-      src.orderBy("n_nationkey").collect().toSeq)
+    withTempDir("graftjson") { tmp =>
+      val src = Tables(spark, sfDir, "nation")
+      src.coalesce(1).write.mode("overwrite").json(s"$tmp/nation_json")
+      val back = spark.read.schema(src.schema).json(s"$tmp/nation_json")
+      assert(back.count() == src.count())
+      assert(back.orderBy("n_nationkey").collect().toSeq ==
+        src.orderBy("n_nationkey").collect().toSeq)
+    }
   }
 
   test("explode/posexplode generators over embeddings") {

@@ -8,6 +8,7 @@ import org.scalatest.BeforeAndAfterAll
 import graft.schema.{SchemaBridge, SimpleSchema}
 import graft.functions.JavaStringHash
 import graft.pipeline.{Bootstrap, ConfluentAvro, RecordGenerator, SchemaRegistry, TransactionalJdbcSink}
+import graft.TempDirs.withTempDir
 
 /** Pipeline-layer unit tests (SURVEY §5.2): schema bridge round-trips,
   * generator determinism, hashCode parity, Confluent framing round-trip,
@@ -106,24 +107,25 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("txn sink binds SQL NULL for null values, not zero") {
-    val dbDir = java.nio.file.Files.createTempDirectory("graftderbynull")
-    val url = s"jdbc:derby:$dbDir/db;create=true"
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType, nullable = true)))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq(
-        org.apache.spark.sql.Row("a", 7L), org.apache.spark.sql.Row("b", null)), 1), schema)
-    val sink = new TransactionalJdbcSink(url, "nulls", "null-q")
-    sink.ensureTables(schema)
-    sink.writeBatch(df, batchId = 0)
-    val conn = java.sql.DriverManager.getConnection(url)
-    try {
-      val rs = conn.createStatement().executeQuery("""SELECT "v" FROM "nulls" WHERE "k" = 'b'""")
-      rs.next()
-      rs.getLong(1)
-      assert(rs.wasNull(), "null landed as 0, not SQL NULL")
-    } finally conn.close()
+    withTempDir("graftderbynull") { dbDir =>
+      val url = s"jdbc:derby:$dbDir/db;create=true"
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("k", org.apache.spark.sql.types.StringType),
+        org.apache.spark.sql.types.StructField("v", org.apache.spark.sql.types.LongType, nullable = true)))
+      val df = spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq(
+          org.apache.spark.sql.Row("a", 7L), org.apache.spark.sql.Row("b", null)), 1), schema)
+      val sink = new TransactionalJdbcSink(url, "nulls", "null-q")
+      sink.ensureTables(schema)
+      sink.writeBatch(df, batchId = 0)
+      val conn = java.sql.DriverManager.getConnection(url)
+      try {
+        val rs = conn.createStatement().executeQuery("""SELECT "v" FROM "nulls" WHERE "k" = 'b'""")
+        rs.next()
+        rs.getLong(1)
+        assert(rs.wasNull(), "null landed as 0, not SQL NULL")
+      } finally conn.close()
+    }
   }
 
   // ------------------------------------------------------- RecordGenerator
@@ -314,77 +316,79 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
   // ------------------------------------------- exactly-once JDBC txn sink
 
   test("txn sink: batch replay is exactly-once (README kill-drill)") {
-    val dbDir = java.nio.file.Files.createTempDirectory("graftderby")
-    val url = s"jdbc:derby:$dbDir/db;create=true"
-    val ss = SchemaBridge.parseSimple(simpleJson).head
-    val df = RecordGenerator.generate(spark, ss, 1000, seed = 3).repartition(4)
+    withTempDir("graftderby") { dbDir =>
+      val url = s"jdbc:derby:$dbDir/db;create=true"
+      val ss = SchemaBridge.parseSimple(simpleJson).head
+      val df = RecordGenerator.generate(spark, ss, 1000, seed = 3).repartition(4)
 
-    val sink = new TransactionalJdbcSink(url, "ds1", "query-A", numSlots = 4)
-    sink.ensureTables(df.schema)
+      val sink = new TransactionalJdbcSink(url, "ds1", "query-A", numSlots = 4)
+      sink.ensureTables(df.schema)
 
-    sink.writeBatch(df, batchId = 0)
-    assert(sink.dataCount() == 1000)
-    assert(sink.ledgerCount() == 4) // one ledger row per content-hash slot
+      sink.writeBatch(df, batchId = 0)
+      assert(sink.dataCount() == 1000)
+      assert(sink.ledgerCount() == 4) // one ledger row per content-hash slot
 
-    // replay the SAME batch (crash-recovery path): must be a no-op
-    sink.writeBatch(df, batchId = 0)
-    assert(sink.dataCount() == 1000)
+      // replay the SAME batch (crash-recovery path): must be a no-op
+      sink.writeBatch(df, batchId = 0)
+      assert(sink.dataCount() == 1000)
 
-    // replay the same DATA partitioned differently upstream (AQE re-plan,
-    // changed shuffle partitions after a restart): slot membership is a
-    // content hash, so this must still be a no-op — keying on the runtime
-    // partition id here would silently drop or duplicate rows
-    sink.writeBatch(df.repartition(7), batchId = 0)
-    assert(sink.dataCount() == 1000)
+      // replay the same DATA partitioned differently upstream (AQE re-plan,
+      // changed shuffle partitions after a restart): slot membership is a
+      // content hash, so this must still be a no-op — keying on the runtime
+      // partition id here would silently drop or duplicate rows
+      sink.writeBatch(df.repartition(7), batchId = 0)
+      assert(sink.dataCount() == 1000)
 
-    // a replay under a DIFFERENT slot count can't be matched to the ledger:
-    // the sink must refuse loudly BEFORE any task writes (un-ledgered slot
-    // ids would otherwise commit overlapping rows and only then abort)
-    val skewed = new TransactionalJdbcSink(url, "ds1", "query-A", numSlots = 8)
-    intercept[IllegalStateException] { skewed.writeBatch(df, batchId = 0) }
-    assert(sink.dataCount() == 1000)
+      // a replay under a DIFFERENT slot count can't be matched to the ledger:
+      // the sink must refuse loudly BEFORE any task writes (un-ledgered slot
+      // ids would otherwise commit overlapping rows and only then abort)
+      val skewed = new TransactionalJdbcSink(url, "ds1", "query-A", numSlots = 8)
+      intercept[IllegalStateException] { skewed.writeBatch(df, batchId = 0) }
+      assert(sink.dataCount() == 1000)
 
-    // next batch appends
-    sink.writeBatch(df, batchId = 1)
-    assert(sink.dataCount() == 2000)
-    assert(sink.ledgerCount() == 8)
+      // next batch appends
+      sink.writeBatch(df, batchId = 1)
+      assert(sink.dataCount() == 2000)
+      assert(sink.ledgerCount() == 8)
 
-    // legacy-ledger migration: a ledger created before the n_slots column
-    // existed must be ALTERed by ensureTables, not brick every write
-    val migDir = java.nio.file.Files.createTempDirectory("graftderbymig")
-    val migUrl = s"jdbc:derby:$migDir/db;create=true"
-    val mconn = java.sql.DriverManager.getConnection(migUrl)
-    try mconn.createStatement().execute(
-      """CREATE TABLE "batch_ledger" (query_id VARCHAR(100) NOT NULL,
-        |batch_id BIGINT NOT NULL, partition_id INT NOT NULL, row_count BIGINT,
-        |PRIMARY KEY (query_id, batch_id, partition_id))""".stripMargin)
-    finally mconn.close()
-    val mig = new TransactionalJdbcSink(migUrl, "mig", "mig-q", numSlots = 2)
-    mig.ensureTables(df.schema)
-    mig.writeBatch(df, batchId = 0)
-    assert(mig.dataCount() == 1000)
-    assert(mig.ledgerCount() == 2)
+      // legacy-ledger migration: a ledger created before the n_slots column
+      // existed must be ALTERed by ensureTables, not brick every write
+      withTempDir("graftderbymig") { migDir =>
+        val migUrl = s"jdbc:derby:$migDir/db;create=true"
+        val mconn = java.sql.DriverManager.getConnection(migUrl)
+        try mconn.createStatement().execute(
+          """CREATE TABLE "batch_ledger" (query_id VARCHAR(100) NOT NULL,
+            |batch_id BIGINT NOT NULL, partition_id INT NOT NULL, row_count BIGINT,
+            |PRIMARY KEY (query_id, batch_id, partition_id))""".stripMargin)
+        finally mconn.close()
+        val mig = new TransactionalJdbcSink(migUrl, "mig", "mig-q", numSlots = 2)
+        mig.ensureTables(df.schema)
+        mig.writeBatch(df, batchId = 0)
+        assert(mig.dataCount() == 1000)
+        assert(mig.ledgerCount() == 2)
 
-    // a batch with a surviving PRE-migration ledger row (NULL n_slots) must
-    // refuse up front: its original slot layout is unknowable, and letting
-    // the job start would commit overlapping rows on un-ledgered slot ids
-    // before any per-slot check fired — the partial-commit duplicate leak
-    val nconn = java.sql.DriverManager.getConnection(migUrl)
-    try nconn.createStatement().execute(
-      """INSERT INTO "batch_ledger" (query_id, batch_id, partition_id, row_count)
-        | VALUES ('mig-q', 5, 0, 10)""".stripMargin)
-    finally nconn.close()
-    intercept[IllegalStateException] { mig.writeBatch(df, batchId = 5) }
-    assert(mig.dataCount() == 1000) // nothing leaked before the refusal
+        // a batch with a surviving PRE-migration ledger row (NULL n_slots) must
+        // refuse up front: its original slot layout is unknowable, and letting
+        // the job start would commit overlapping rows on un-ledgered slot ids
+        // before any per-slot check fired — the partial-commit duplicate leak
+        val nconn = java.sql.DriverManager.getConnection(migUrl)
+        try nconn.createStatement().execute(
+          """INSERT INTO "batch_ledger" (query_id, batch_id, partition_id, row_count)
+            | VALUES ('mig-q', 5, 0, 10)""".stripMargin)
+        finally nconn.close()
+        intercept[IllegalStateException] { mig.writeBatch(df, batchId = 5) }
+        assert(mig.dataCount() == 1000) // nothing leaked before the refusal
 
-    // JDBC SCAN (SURVEY §2.3.1 R12 read direction): Spark reads the landed
-    // table back and the round-trip preserves every row.
-    val back = spark.read.format("jdbc")
-      .option("url", url).option("dbtable", """"ds1"""").load()
-    assert(back.count() == 2000)
-    assert(back.columns.sorted.toSeq == df.columns.sorted.toSeq)
-    val key = df.columns.head
-    assert(back.select(key).distinct().count() == df.select(key).distinct().count())
+        // JDBC SCAN (SURVEY §2.3.1 R12 read direction): Spark reads the landed
+        // table back and the round-trip preserves every row.
+        val back = spark.read.format("jdbc")
+          .option("url", url).option("dbtable", """"ds1"""").load()
+        assert(back.count() == 2000)
+        assert(back.columns.sorted.toSeq == df.columns.sorted.toSeq)
+        val key = df.columns.head
+        assert(back.select(key).distinct().count() == df.select(key).distinct().count())
+      }
+    }
   }
 
   // ------------------------------------------------- R4 topic lifecycle

@@ -6,6 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.{Relational, TextAnalysis}
+import graft.TempDirs.withTempDir
 
 /** Semantic invariants for the round-7 operators, independently of the
   * DuckDB oracle: q115's sample is recomputed from scratch in the driver
@@ -174,33 +175,35 @@ class RelationalOpsSpec extends AnyFunSuite with BeforeAndAfterAll {
     // p50 on the hot value, p90 inside the above-tail. Expected values are
     // hand-derived (independent of both spellings), and the built-in
     // percentile_disc must agree on the same data.
-    val dir = java.nio.file.Files.createTempDirectory("graft_skew_li").toString
-    val below = spark.range(1, 5001)
-      .select(lit("A").as("l_returnflag"), (col("id") * 0.01).as("l_extendedprice"))
-    val hot = spark.range(10000)
-      .select(lit("A").as("l_returnflag"), lit(500.0).as("l_extendedprice"))
-    val above = spark.range(0, 5000)
-      .select(lit("A").as("l_returnflag"), (lit(1000.0) + col("id") * 0.01).as("l_extendedprice"))
-    below.unionAll(hot).unionAll(above)
-      .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    val got = Relational.q112PercentileDiscSharded(spark, dir).collect()
-    assert(got.length == 1)
-    val r = got.head
-    // n=20000: rank 5000 -> 50.00 (cume .25 exactly); rank 10000 -> the hot
-    // 500.00 (cume of 50.00-tail is .25 < .5); rank 18000 -> 1000 + 2999*.01
-    assert(r.getDouble(1) == 50.0, s"p25: ${r.getDouble(1)}")
-    assert(r.getDouble(2) == 500.0, s"p50: ${r.getDouble(2)}")
-    assert(r.getDouble(3) == 1029.99, s"p90: ${r.getDouble(3)}")
-    assert(r.getLong(4) == 20000L)
-    spark.read.parquet(s"$dir/lineitem.parquet").createOrReplaceTempView("skew_li")
-    val builtin = spark.sql(
-      """SELECT l_returnflag,
-        |  percentile_disc(0.25) WITHIN GROUP (ORDER BY l_extendedprice) AS p25,
-        |  percentile_disc(0.5)  WITHIN GROUP (ORDER BY l_extendedprice) AS p50,
-        |  percentile_disc(0.9)  WITHIN GROUP (ORDER BY l_extendedprice) AS p90,
-        |  COUNT(*) AS n
-        |FROM skew_li GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
-      .collect().toSeq
-    assert(builtin == got.toSeq, s"built-in diverged on skewed data:\n$builtin\n${got.toSeq}")
+    withTempDir("graft_skew_li") { dirPath =>
+      val dir = dirPath.toString
+      val below = spark.range(1, 5001)
+        .select(lit("A").as("l_returnflag"), (col("id") * 0.01).as("l_extendedprice"))
+      val hot = spark.range(10000)
+        .select(lit("A").as("l_returnflag"), lit(500.0).as("l_extendedprice"))
+      val above = spark.range(0, 5000)
+        .select(lit("A").as("l_returnflag"), (lit(1000.0) + col("id") * 0.01).as("l_extendedprice"))
+      below.unionAll(hot).unionAll(above)
+        .write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+      val got = Relational.q112PercentileDiscSharded(spark, dir).collect()
+      assert(got.length == 1)
+      val r = got.head
+      // n=20000: rank 5000 -> 50.00 (cume .25 exactly); rank 10000 -> the hot
+      // 500.00 (cume of 50.00-tail is .25 < .5); rank 18000 -> 1000 + 2999*.01
+      assert(r.getDouble(1) == 50.0, s"p25: ${r.getDouble(1)}")
+      assert(r.getDouble(2) == 500.0, s"p50: ${r.getDouble(2)}")
+      assert(r.getDouble(3) == 1029.99, s"p90: ${r.getDouble(3)}")
+      assert(r.getLong(4) == 20000L)
+      spark.read.parquet(s"$dir/lineitem.parquet").createOrReplaceTempView("skew_li")
+      val builtin = spark.sql(
+        """SELECT l_returnflag,
+          |  percentile_disc(0.25) WITHIN GROUP (ORDER BY l_extendedprice) AS p25,
+          |  percentile_disc(0.5)  WITHIN GROUP (ORDER BY l_extendedprice) AS p50,
+          |  percentile_disc(0.9)  WITHIN GROUP (ORDER BY l_extendedprice) AS p90,
+          |  COUNT(*) AS n
+          |FROM skew_li GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)
+        .collect().toSeq
+      assert(builtin == got.toSeq, s"built-in diverged on skewed data:\n$builtin\n${got.toSeq}")
+    }
   }
 }

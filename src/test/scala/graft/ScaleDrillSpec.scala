@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.TempDirs.withTempDir
+
 /** The ≥10× synthetic scale drill, exercised at spec scale (sf0.001 × 4):
   * materialization invariants (row counts, preserved dup structure) and the
   * no-hidden-quadratic contract on the expensive-query set. Bench runs the
@@ -20,7 +22,10 @@ class ScaleDrillSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sparkContext.setLogLevel("ERROR")
     outDir = java.nio.file.Files.createTempDirectory("graftdrill").toString
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    if (outDir != null) TempDirs.delete(java.nio.file.Paths.get(outDir))
+  }
 
   test("materialize: linear row counts, scale-invariant dup structure, distinct vectors") {
     ScaleDrill.materialize(spark, sfDir, outDir, factor)
@@ -104,17 +109,19 @@ class ScaleDrillSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("text probe: documents-only materialization, exact volume ratio, probe rows") {
-    val probeDir = java.nio.file.Files.createTempDirectory("graftprobe").toString
-    val (rows, volBase, volBig) = ScaleDrill.textProbe(spark, sfDir, probeDir, factor)
-    assert(rows.map(_._1) == ScaleDrill.textProbeQueries)
-    // the splice token ADDS words, so the scaled side carries MORE than
-    // factor× bigrams — the confound the vol_ratio column exists to expose
-    assert(volBase > 0 && volBig > volBase * factor,
-      s"volume ratio must exceed the copy factor: $volBase -> $volBig at $factor")
-    rows.foreach { case (name, base, big, pairs) =>
-      assert(base > 0 && big > 0 && (pairs == 2 || pairs == 3))
-      info(f"$name: base=$base%.2f s  x$factor=$big%.2f s  " +
-        f"ratio=${big / math.max(base, 1e-9)}%.2f  vol=${volBig.toDouble / volBase}%.2f")
+    withTempDir("graftprobe") { probePath =>
+      val probeDir = probePath.toString
+      val (rows, volBase, volBig) = ScaleDrill.textProbe(spark, sfDir, probeDir, factor)
+      assert(rows.map(_._1) == ScaleDrill.textProbeQueries)
+      // the splice token ADDS words, so the scaled side carries MORE than
+      // factor× bigrams — the confound the vol_ratio column exists to expose
+      assert(volBase > 0 && volBig > volBase * factor,
+        s"volume ratio must exceed the copy factor: $volBase -> $volBig at $factor")
+      rows.foreach { case (name, base, big, pairs) =>
+        assert(base > 0 && big > 0 && (pairs == 2 || pairs == 3))
+        info(f"$name: base=$base%.2f s  x$factor=$big%.2f s  " +
+          f"ratio=${big / math.max(base, 1e-9)}%.2f  vol=${volBig.toDouble / volBase}%.2f")
+      }
     }
   }
 
@@ -157,16 +164,18 @@ class ScaleDrillSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("textMarginal: three linear points, exact volumes, resolvable marginals") {
-    val dir = java.nio.file.Files.createTempDirectory("graftmarg").toString
-    val (rows, v1, vLo, vHi) = ScaleDrill.textMarginal(spark, sfDir, dir, 3, 9)
-    assert(rows.map(_._1) == ScaleDrill.textProbeQueries)
-    // replacement mode: volumes are EXACT multiples of the base
-    assert(v1 > 0 && vLo == v1 * 3 && vHi == v1 * 9,
-      s"linear mode must scale volume exactly: $v1 / $vLo / $vHi")
-    rows.foreach { case (name, t1, tLo, tHi, pairs) =>
-      assert(t1 > 0 && tLo > 0 && tHi > 0 && (pairs == 2 || pairs == 3))
-      info(f"$name: 1x=$t1%.2f s  3x=$tLo%.2f s  9x=$tHi%.2f s  " +
-        f"marginal=${ScaleDrill.marginalRatio(t1, tLo, tHi, v1, vLo, vHi)}%.2f")
+    withTempDir("graftmarg") { dirPath =>
+      val dir = dirPath.toString
+      val (rows, v1, vLo, vHi) = ScaleDrill.textMarginal(spark, sfDir, dir, 3, 9)
+      assert(rows.map(_._1) == ScaleDrill.textProbeQueries)
+      // replacement mode: volumes are EXACT multiples of the base
+      assert(v1 > 0 && vLo == v1 * 3 && vHi == v1 * 9,
+        s"linear mode must scale volume exactly: $v1 / $vLo / $vHi")
+      rows.foreach { case (name, t1, tLo, tHi, pairs) =>
+        assert(t1 > 0 && tLo > 0 && tHi > 0 && (pairs == 2 || pairs == 3))
+        info(f"$name: 1x=$t1%.2f s  3x=$tLo%.2f s  9x=$tHi%.2f s  " +
+          f"marginal=${ScaleDrill.marginalRatio(t1, tLo, tHi, v1, vLo, vHi)}%.2f")
+      }
     }
   }
 }

@@ -9,21 +9,26 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Scale
+import graft.TempDirs.withTempDir
 
 /** Scale-utility tests: salted join row-parity + spread, bucketed join
   * zero-exchange plan shape. */
 class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
   val sfDir = "/root/testdata/sf0.001"
   var spark: SparkSession = _
+  var warehouse: java.nio.file.Path = _
 
   override def beforeAll(): Unit = {
+    warehouse = java.nio.file.Files.createTempDirectory("graftwh")
     spark = GraftSession.builder("local[4]")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graftwh").toString)
+      .config("spark.sql.warehouse.dir", warehouse.toString)
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
   }
-  override def afterAll(): Unit = if (spark != null) spark.stop()
+  override def afterAll(): Unit = {
+    if (spark != null) spark.stop()
+    if (warehouse != null) TempDirs.delete(warehouse)
+  }
 
   private def countShuffles(plan: SparkPlan): Int = {
     var n = 0
@@ -97,70 +102,74 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("partitioned layout: directory pruning + sort-key pushdown + bounded file count") {
     import graft.sources.ParquetLayout
-    val out = java.nio.file.Files.createTempDirectory("graftlayout").toString
-    val docs = Tables(spark, sfDir, "documents")
-    ParquetLayout.writePartitioned(docs, out, Seq("lang"), Seq("doc_id"))
+    withTempDir("graftlayout") { outPath =>
+      val out = outPath.toString
+      val docs = Tables(spark, sfDir, "documents")
+      ParquetLayout.writePartitioned(docs, out, Seq("lang"), Seq("doc_id"))
 
-    // bounded files: repartition-by-partCols keeps each lang in one task —
-    // one file per directory, not one per (task × partition)
-    val langDirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("lang="))
-    assert(langDirs.nonEmpty)
-    langDirs.foreach { d =>
-      val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
-      assert(files.length == 1, s"${d.getName}: ${files.length} files (small-file fan-out)")
+      // bounded files: repartition-by-partCols keeps each lang in one task —
+      // one file per directory, not one per (task × partition)
+      val langDirs = new java.io.File(out).listFiles().filter(_.getName.startsWith("lang="))
+      assert(langDirs.nonEmpty)
+      langDirs.foreach { d =>
+        val files = d.listFiles().filter(_.getName.endsWith(".parquet"))
+        assert(files.length == 1, s"${d.getName}: ${files.length} files (small-file fan-out)")
+      }
+
+      val back = ParquetLayout.read(spark, out)
+      assert(back.count() == docs.count())
+
+      // partition pruning: the lang predicate lands in PartitionFilters (file
+      // skipping before I/O), NOT just PushedFilters (row-group skipping)
+      val pruned = back.filter(col("lang") === "en" && col("doc_id") < 100)
+      val plan = pruned.queryExecution.executedPlan.toString
+      assert(plan.contains("PartitionFilters: [isnotnull(lang"),
+        s"lang filter not pruning partitions:\n$plan")
+      assert(plan.contains("PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,100)"),
+        s"sort-key filter not pushed to row groups:\n$plan")
+      // pruning is observable, not just printed: only the en directory is read
+      val filesRead = pruned.queryExecution.executedPlan.collectLeaves()
+        .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
+          f.selectedPartitions.totalNumberOfFiles }.sum
+      assert(filesRead == 1L, s"expected 1 file read after pruning, got $filesRead")
+      // and the rows match the unpartitioned truth
+      val expect = docs.filter(col("lang") === "en" && col("doc_id") < 100).count()
+      assert(pruned.count() == expect)
     }
-
-    val back = ParquetLayout.read(spark, out)
-    assert(back.count() == docs.count())
-
-    // partition pruning: the lang predicate lands in PartitionFilters (file
-    // skipping before I/O), NOT just PushedFilters (row-group skipping)
-    val pruned = back.filter(col("lang") === "en" && col("doc_id") < 100)
-    val plan = pruned.queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters: [isnotnull(lang"),
-      s"lang filter not pruning partitions:\n$plan")
-    assert(plan.contains("PushedFilters: [IsNotNull(doc_id), LessThan(doc_id,100)"),
-      s"sort-key filter not pushed to row groups:\n$plan")
-    // pruning is observable, not just printed: only the en directory is read
-    val filesRead = pruned.queryExecution.executedPlan.collectLeaves()
-      .collect { case f: org.apache.spark.sql.execution.FileSourceScanExec =>
-        f.selectedPartitions.totalNumberOfFiles }.sum
-    assert(filesRead == 1L, s"expected 1 file read after pruning, got $filesRead")
-    // and the rows match the unpartitioned truth
-    val expect = docs.filter(col("lang") === "en" && col("doc_id") < 100).count()
-    assert(pruned.count() == expect)
   }
 
   test("z-order layout: per-file min/max stay tight on BOTH dimensions") {
     import graft.sources.ParquetLayout
     val e = Tables(spark, sfDir, "events").select("user_id", "ts", "event_id")
-    val tmp = java.nio.file.Files.createTempDirectory("graftz").toString
-    val zdir = s"$tmp/zorder"; val sdir = s"$tmp/sorted"
-    ParquetLayout.writeZOrdered(e, zdir, "user_id", "ts", nFiles = 16)
-    // the comparison layout: same file count, clustered on user_id only
-    e.repartitionByRange(16, col("user_id")).sortWithinPartitions("user_id")
-      .write.mode("overwrite").parquet(sdir)
-    // avg per-file (max−min)/global-span — the quantity row-group min/max
-    // skipping actually prunes on. No plan text: this measures the FILES.
-    def avgWidth(path: String, c: String): Double = {
-      val d = spark.read.parquet(path)
-      val g = d.agg((max(col(c)) - min(col(c))).cast("double")).head.getDouble(0)
-      d.groupBy(input_file_name())
-        .agg(((max(col(c)) - min(col(c))).cast("double") / g).as("w"))
-        .agg(avg("w")).head.getDouble(0)
+    withTempDir("graftz") { tmpPath =>
+      val tmp = tmpPath.toString
+      val zdir = s"$tmp/zorder"; val sdir = s"$tmp/sorted"
+      ParquetLayout.writeZOrdered(e, zdir, "user_id", "ts", nFiles = 16)
+      // the comparison layout: same file count, clustered on user_id only
+      e.repartitionByRange(16, col("user_id")).sortWithinPartitions("user_id")
+        .write.mode("overwrite").parquet(sdir)
+      // avg per-file (max−min)/global-span — the quantity row-group min/max
+      // skipping actually prunes on. No plan text: this measures the FILES.
+      def avgWidth(path: String, c: String): Double = {
+        val d = spark.read.parquet(path)
+        val g = d.agg((max(col(c)) - min(col(c))).cast("double")).head.getDouble(0)
+        d.groupBy(input_file_name())
+          .agg(((max(col(c)) - min(col(c))).cast("double") / g).as("w"))
+          .agg(avg("w")).head.getDouble(0)
+      }
+      // 16 z-tiles ⇒ each file covers ~1/√16 = 1/4 of EACH dimension (+slop
+      // for range-sample boundaries and the 150-user granularity at sf0.001)
+      assert(avgWidth(zdir, "user_id") < 0.6,
+        "z-order: user_id not clustered within files")
+      assert(avgWidth(zdir, "ts") < 0.6,
+        "z-order: ts not clustered within files")
+      // the single-column sort serves user_id BETTER (tighter on its one
+      // dimension — that is the trade) but carries the FULL time span in
+      // every file: a time predicate skips nothing there
+      assert(avgWidth(sdir, "user_id") < 0.3, "sorted baseline lost its own key")
+      assert(avgWidth(sdir, "ts") > 0.8,
+        "single-column sort should NOT cluster ts (else the test is vacuous)")
     }
-    // 16 z-tiles ⇒ each file covers ~1/√16 = 1/4 of EACH dimension (+slop
-    // for range-sample boundaries and the 150-user granularity at sf0.001)
-    assert(avgWidth(zdir, "user_id") < 0.6,
-      "z-order: user_id not clustered within files")
-    assert(avgWidth(zdir, "ts") < 0.6,
-      "z-order: ts not clustered within files")
-    // the single-column sort serves user_id BETTER (tighter on its one
-    // dimension — that is the trade) but carries the FULL time span in
-    // every file: a time predicate skips nothing there
-    assert(avgWidth(sdir, "user_id") < 0.3, "sorted baseline lost its own key")
-    assert(avgWidth(sdir, "ts") > 0.8,
-      "single-column sort should NOT cluster ts (else the test is vacuous)")
   }
 
   test("dynamic partition pruning: a dim-side filter prunes fact directories at runtime") {
@@ -171,42 +180,46 @@ class ScaleSpec extends AnyFunSuite with BeforeAndAfterAll {
     // independent of AQE (PartitionPruning is a plain optimizer rule).
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
-      val out = java.nio.file.Files.createTempDirectory("graftdpp").toString
-      val docs = Tables(spark, sfDir, "documents")
-      ParquetLayout.writePartitioned(docs, out, Seq("lang"), Seq("doc_id"))
-      val nLangs = new java.io.File(out).listFiles()
-        .count(_.getName.startsWith("lang="))
-      assert(nLangs >= 2, s"need multiple partition dirs, got $nLangs")
-      val fact = ParquetLayout.read(spark, out)
-      // The dim must be a SEPARATE stored table whose predicate column is
-      // physically independent of the join key: a derived tier column
-      // (when(lang='en',...)) gets inferred ACROSS the equi-join by
-      // InferFiltersFromConstraints and statically pruned — no DPP needed.
-      // Only an opaque attribute forces the runtime subquery. This is the
-      // SURVEY §4.2 DPP requirement: pruning through a join.
-      val dimDir = java.nio.file.Files.createTempDirectory("graftdppdim").toString
-      docs.select("lang").distinct()
-        .withColumn("tier", when(col("lang") === "en", "gold").otherwise("base"))
-        .write.mode("overwrite").parquet(dimDir)
-      val dim = spark.read.parquet(dimDir)
-      val j = fact.join(broadcast(dim.filter(col("tier") === "gold")), Seq("lang"))
-        .agg(count(lit(1)).as("n"))
-      val plan = j.queryExecution.executedPlan
-      assert(plan.toString.toLowerCase.contains("dynamicpruningexpression"),
-        s"no dynamic pruning filter on the fact scan:\n$plan")
-      // correct result…
-      val expected = docs.filter(col("lang") === "en").count()
-      assert(j.collect()(0).getLong(0) == expected)
-      // …and OBSERVABLY pruned (files-read metric, not plan text): of the
-      // nLangs directories only lang=en's single file is ever opened
-      val dirTag = out.substring(out.lastIndexOf('/') + 1)
-      val scans = plan.collect {
-        case f: org.apache.spark.sql.execution.FileSourceScanExec
-          if f.relation.location.rootPaths.exists(_.toString.contains(dirTag)) => f
+      withTempDir("graftdpp") { outPath =>
+        val out = outPath.toString
+        val docs = Tables(spark, sfDir, "documents")
+        ParquetLayout.writePartitioned(docs, out, Seq("lang"), Seq("doc_id"))
+        val nLangs = new java.io.File(out).listFiles()
+          .count(_.getName.startsWith("lang="))
+        assert(nLangs >= 2, s"need multiple partition dirs, got $nLangs")
+        val fact = ParquetLayout.read(spark, out)
+        // The dim must be a SEPARATE stored table whose predicate column is
+        // physically independent of the join key: a derived tier column
+        // (when(lang='en',...)) gets inferred ACROSS the equi-join by
+        // InferFiltersFromConstraints and statically pruned — no DPP needed.
+        // Only an opaque attribute forces the runtime subquery. This is the
+        // SURVEY §4.2 DPP requirement: pruning through a join.
+        withTempDir("graftdppdim") { dimPath =>
+          val dimDir = dimPath.toString
+          docs.select("lang").distinct()
+            .withColumn("tier", when(col("lang") === "en", "gold").otherwise("base"))
+            .write.mode("overwrite").parquet(dimDir)
+          val dim = spark.read.parquet(dimDir)
+          val j = fact.join(broadcast(dim.filter(col("tier") === "gold")), Seq("lang"))
+            .agg(count(lit(1)).as("n"))
+          val plan = j.queryExecution.executedPlan
+          assert(plan.toString.toLowerCase.contains("dynamicpruningexpression"),
+            s"no dynamic pruning filter on the fact scan:\n$plan")
+          // correct result…
+          val expected = docs.filter(col("lang") === "en").count()
+          assert(j.collect()(0).getLong(0) == expected)
+          // …and OBSERVABLY pruned (files-read metric, not plan text): of the
+          // nLangs directories only lang=en's single file is ever opened
+          val dirTag = out.substring(out.lastIndexOf('/') + 1)
+          val scans = plan.collect {
+            case f: org.apache.spark.sql.execution.FileSourceScanExec
+              if f.relation.location.rootPaths.exists(_.toString.contains(dirTag)) => f
+          }
+          assert(scans.nonEmpty, s"fact scan not found in plan:\n$plan")
+          val filesRead = scans.head.metrics("numFiles").value
+          assert(filesRead == 1L, s"DPP read $filesRead files; expected 1 of $nLangs")
+        }
       }
-      assert(scans.nonEmpty, s"fact scan not found in plan:\n$plan")
-      val filesRead = scans.head.metrics("numFiles").value
-      assert(filesRead == 1L, s"DPP read $filesRead files; expected 1 of $nLangs")
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.network.util.JavaUtils
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
@@ -13,6 +12,7 @@ import org.scalatest.funsuite.AnyFunSuite
 import graft.pipeline.{RecordGenerator, TransactionalJdbcSink}
 import graft.schema.SchemaBridge
 import graft.streaming.{DocRecord, FunnelEvent, FunnelProgress, KeyedEvent, NearDupPair, StreamMinhash, StreamOps, StreamingPipeline}
+import graft.TempDirs.withTempDir
 
 /** Streaming-layer tests (SURVEY §2.3.9, §5.2): watermarked windows with
   * late-data drop, session windows, stream dedup, explicit keyed state, and
@@ -28,20 +28,6 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
   override def afterAll(): Unit = if (spark != null) spark.stop()
 
   private def ts(minute: Int): Timestamp = Timestamp.valueOf(f"2024-01-01 10:$minute%02d:00")
-
-  /** Run `body` in a fresh temp directory, then delete it. A Derby database
-    * the body created at `<dir>/db` is shut down first (SQLState 08006 is
-    * Derby's clean-shutdown signal), so none of its files stays open. */
-  private def withTempDir[T](prefix: String)(body: java.nio.file.Path => T): T = {
-    val dir = java.nio.file.Files.createTempDirectory(prefix)
-    try body(dir)
-    finally {
-      if (java.nio.file.Files.exists(dir.resolve("db")))
-        try java.sql.DriverManager.getConnection(s"jdbc:derby:$dir/db;shutdown=true").close()
-        catch { case e: java.sql.SQLException if e.getSQLState == "08006" => () }
-      JavaUtils.deleteRecursively(dir.toFile)
-    }
-  }
 
   /** Run to a memory sink, processing each feed step as its own micro-batch
     * (watermarks only advance at batch boundaries). */

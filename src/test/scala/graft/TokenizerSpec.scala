@@ -6,6 +6,7 @@ import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.Tokenizer
+import graft.TempDirs.withTempDir
 
 /** Ground-truth checks for BPE training (q168) against a NAIVE in-memory
   * reference implementation — an independent second spelling of Sennrich
@@ -201,22 +202,24 @@ class TokenizerSpec extends AnyFunSuite with BeforeAndAfterAll {
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(texts.map { case (i, t) => Row(i, t) }, 2),
       StructType(Seq(StructField("doc_id", LongType), StructField("text", StringType))))
-    val path = java.nio.file.Files.createTempDirectory("graft_tok_spec").toString
-    Tokenizer.writeTokenizer(spark, df.select("text"), path)
-    val (merges, vocab) = Tokenizer.loadTokenizer(spark, path)
-    // the persisted merge table IS the train output (strings/longs
-    // round-trip parquet bit-exactly)
-    val inlineMerges = Tokenizer.bpeTrain(spark, df.select("text"))
-      .collect().map(_.toSeq).toSet
-    assert(merges.collect().map(_.toSeq).toSet == inlineMerges)
-    // vocab is total over the corpus pre-tokenizer's admissions
-    assert(vocab.count() ==
-      texts.flatMap(_._2.split(" ")).filter(w => w.matches("[a-z]+")).distinct.size)
-    // artifact-served apply ≡ inline apply, row-for-row
-    val inline = Tokenizer.bpeTokenize(spark, df).collect().map(_.toSeq).toSeq
-    val served = Tokenizer.tokenizeWith(df, vocab).collect().map(_.toSeq).toSeq
-    assert(served == inline,
-      "artifact-served tokenization diverged from inline")
+    withTempDir("graft_tok_spec") { dir =>
+      val path = dir.toString
+      Tokenizer.writeTokenizer(spark, df.select("text"), path)
+      val (merges, vocab) = Tokenizer.loadTokenizer(spark, path)
+      // the persisted merge table IS the train output (strings/longs
+      // round-trip parquet bit-exactly)
+      val inlineMerges = Tokenizer.bpeTrain(spark, df.select("text"))
+        .collect().map(_.toSeq).toSet
+      assert(merges.collect().map(_.toSeq).toSet == inlineMerges)
+      // vocab is total over the corpus pre-tokenizer's admissions
+      assert(vocab.count() ==
+        texts.flatMap(_._2.split(" ")).filter(w => w.matches("[a-z]+")).distinct.size)
+      // artifact-served apply ≡ inline apply, row-for-row
+      val inline = Tokenizer.bpeTokenize(spark, df).collect().map(_.toSeq).toSeq
+      val served = Tokenizer.tokenizeWith(df, vocab).collect().map(_.toSeq).toSeq
+      assert(served == inline,
+        "artifact-served tokenization diverged from inline")
+    }
   }
 
   // --------------------------------------------- merge replay (q173)

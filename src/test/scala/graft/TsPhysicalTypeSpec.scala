@@ -67,12 +67,7 @@ class TsPhysicalTypeSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   override def afterAll(): Unit = {
     if (spark != null) spark.stop()
-    if (base != null) {
-      def rm(p: java.io.File): Unit = {
-        Option(p.listFiles()).foreach(_.foreach(rm)); p.delete(): Unit
-      }
-      rm(base.toFile)
-    }
+    if (base != null) TempDirs.delete(base)
   }
 
   /** INT64 TIMESTAMP(NANOS, adjustedToUTC) writer — the one spelling Spark

@@ -16,12 +16,7 @@ class VerifyHardeningSpec extends AnyFunSuite
   private def tmp(prefix: String): String = {
     val d = Files.createTempDirectory(prefix).toString; tmps += d; d
   }
-  override def afterAll(): Unit = tmps.foreach { d =>
-    def rm(f: java.io.File): Unit = {
-      Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(): Unit
-    }
-    rm(new java.io.File(d))
-  }
+  override def afterAll(): Unit = tmps.foreach(d => TempDirs.delete(java.nio.file.Paths.get(d)))
 
   test("a forced failure dumps an error row per query and returns rc=1") {
     val bad = tmp("graft_verify_bad") // no parquet inside
