@@ -158,9 +158,9 @@ object Bench {
     val ((pipelineRps, pipelineRpsMixed), loadPipeline) = HostLoad.around {
       val a = benchPipeline(spark)
       // Version-mixed lane: half the stream on schema v1, half on v2 —
-      // registry-resolved decodeAuto must not regress vs the single-version
-      // decode path (the per-id reader is memoized per partition, so the mix
-      // costs one extra Schema.parse per (partition, id), not per row)
+      // must not regress vs the single-version lane (the per-id reader is
+      // memoized per partition, so the mix costs one extra Schema.parse per
+      // (partition, id), not per row)
       val b = benchPipelineMixedVersions(spark)
       (a, b)
     }
@@ -767,7 +767,7 @@ object Bench {
     val id = SchemaRegistry.register("bench_ds-value", avro)
     val src = RecordGenerator.generate(spark, ss, n, seed = 42)
     val t0 = System.nanoTime()
-    ConfluentAvro.decode(ConfluentAvro.encode(src, avro, id, numPartitions = 9), "value", avro)
+    ConfluentAvro.decodeAuto(ConfluentAvro.encode(src, avro, id, numPartitions = 9), "value", avro)
       .write.format("noop").mode("overwrite").save()
     n / ((System.nanoTime() - t0) / 1e9)
   }

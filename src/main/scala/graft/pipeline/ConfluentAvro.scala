@@ -95,23 +95,43 @@ object ConfluentAvro {
     }(Encoders.row(outSchema))
   }
 
-  /** Decode with registry-resolved WRITER schemas (the reference's actual
-    * consumer behavior: KafkaAvroDeserializer fetches the schema by the
-    * frame's embedded id, AvroConsumer.java:67-69) reconciled to a fixed
+  /** The one decoder: registry-resolved WRITER schemas (the reference's
+    * actual consumer behavior: KafkaAvroDeserializer fetches the schema by
+    * the frame's embedded id, AvroConsumer.java:67-69) reconciled to a fixed
     * READER schema via Avro schema resolution — so a stream carrying
     * multiple schema versions (field added with default, field dropped)
-    * decodes to one uniform output schema. The registry snapshot is taken
-    * at PLAN time and shipped in the closure: executors on a real cluster
-    * have no driver registry state (and never open registry connections —
-    * see [[SchemaRegistryClient.snapshot]]). Pass an
-    * [[HttpSchemaRegistryClient]] to resolve against a live Confluent
-    * registry; the default is the in-process one. */
+    * decodes to one uniform output schema. An id outside the registry or a
+    * writer the reader cannot resolve fails the read, the same check the
+    * reference consumer makes. The registry snapshot is taken at PLAN time
+    * and shipped in the closure: executors on a real cluster have no driver
+    * registry state (and never open registry connections — see
+    * [[SchemaRegistryClient.snapshot]]). Pass an [[HttpSchemaRegistryClient]]
+    * to resolve against a live Confluent registry; the default is the
+    * in-process one.
+    *
+    * `corruptCol = None` is strict (fail-fast, reference-faithful): the
+    * output is `avroToStruct(readerSchema)`, non-nullable. `Some(c)` is
+    * PERMISSIVE (the Spark `_corrupt_record` pattern): a malformed frame —
+    * wrong magic byte, truncated frame, unregistered id, incompatible
+    * writer, or an Avro body that doesn't parse — becomes a row of NULL
+    * fields with the failure reason in `c`, instead of killing the job. At
+    * 100 TB one poisoned record MUST NOT fail a multi-hour pipeline run;
+    * callers route `c IS NOT NULL` rows to a dead-letter sink and keep
+    * going. Every field is nullable in that mode. */
   def decodeAuto(df: DataFrame, valueCol: String, readerSchema: Schema,
-                 registry: SchemaRegistryClient = SchemaRegistry): DataFrame = {
-    val st = SchemaBridge.avroToStruct(readerSchema)
+                 registry: SchemaRegistryClient = SchemaRegistry,
+                 corruptCol: Option[String] = None): DataFrame = {
+    val base = SchemaBridge.avroToStruct(readerSchema)
+    val st = corruptCol.fold(base) { c =>
+      require(!base.fieldNames.contains(c),
+        s"decoded schema already has a '$c' column — pass a different corruptCol")
+      StructType(base.fields.map(_.copy(nullable = true)) :+
+        StructField(c, StringType, nullable = true))
+    }
     val readerJson = readerSchema.toString
     val writers: Map[Int, String] = registry.snapshot()
     val idx = df.schema.fieldIndex(valueCol)
+    val n = base.length
     df.mapPartitions { rows =>
       val reader = new Schema.Parser().parse(readerJson)
       val parsed = scala.collection.mutable.Map[Int, GenericDatumReader[GenericRecord]]()
@@ -122,76 +142,21 @@ object ConfluentAvro {
           new GenericDatumReader[GenericRecord](
             new Schema.Parser().parse(writerJson), reader)
         })
-      var decoder: org.apache.avro.io.BinaryDecoder = null
-      rows.map { row =>
-        val (id, body) = unframe(row.getAs[Array[Byte]](idx))
-        decoder = DecoderFactory.get().binaryDecoder(body, decoder)
-        recordToRow(readerFor(id).read(null, decoder), st)
-      }
-    }(Encoders.row(st))
-  }
-
-  /** Decode Confluent-framed Avro binaries back to typed columns. The
-    * expected schema id is validated per record — the single-schema
-    * stand-in for a registry lookup (SURVEY §4.3.1; live-registry multi-
-    * version resolution swaps `require` for the id-keyed lookup that
-    * [[decodeAuto]] implements). */
-  def decode(df: DataFrame, valueCol: String, avroSchema: Schema,
-             expectedSchemaId: Option[Int] = None): DataFrame = {
-    val st = SchemaBridge.avroToStruct(avroSchema)
-    val schemaJson = avroSchema.toString
-    val idx = df.schema.fieldIndex(valueCol)
-    df.mapPartitions { rows =>
-      val schema = new Schema.Parser().parse(schemaJson)
-      val reader = new GenericDatumReader[GenericRecord](schema)
-      var record: GenericRecord = null
-      var decoder: org.apache.avro.io.BinaryDecoder = null
-      rows.map { row =>
-        val (id, body) = unframe(row.getAs[Array[Byte]](idx))
-        expectedSchemaId.foreach(e => require(id == e, s"schema id $id != expected $e"))
-        decoder = DecoderFactory.get().binaryDecoder(body, decoder)
-        record = reader.read(record, decoder)
-        recordToRow(record, st)
-      }
-    }(Encoders.row(st))
-  }
-
-  /** PERMISSIVE decode (the Spark `_corrupt_record` pattern applied to the
-    * framed-Avro source): a malformed frame — wrong magic byte, truncated
-    * header, wrong schema id, or an Avro body that doesn't parse — becomes
-    * a row of NULL fields with the failure reason in `_corrupt`, instead of
-    * killing the job. At 100 TB one poisoned record MUST NOT fail a
-    * multi-hour pipeline run; callers route `_corrupt IS NOT NULL` rows to
-    * a dead-letter sink and keep going. [[decode]] stays the strict
-    * (fail-fast, reference-faithful) variant. */
-  def decodePermissive(df: DataFrame, valueCol: String, avroSchema: Schema,
-                       expectedSchemaId: Option[Int] = None,
-                       corruptCol: String = "_corrupt"): DataFrame = {
-    val base = SchemaBridge.avroToStruct(avroSchema)
-    require(!base.fieldNames.contains(corruptCol),
-      s"decoded schema already has a '$corruptCol' column — pass a different corruptCol")
-    val st = StructType(base.fields.map(_.copy(nullable = true)) :+
-      StructField(corruptCol, StringType, nullable = true))
-    val schemaJson = avroSchema.toString
-    val idx = df.schema.fieldIndex(valueCol)
-    val n = base.length
-    df.mapPartitions { rows =>
-      val schema = new Schema.Parser().parse(schemaJson)
-      val reader = new GenericDatumReader[GenericRecord](schema)
       // decoder reuse is safe across corrupt rows: binaryDecoder(body, reuse)
-      // fully re-binds the buffer. The RECORD is not reused — a corrupt row's
-      // partially-populated fields must not leak into the next decode.
+      // fully re-binds the buffer. The RECORD is never reused — a corrupt
+      // row's partially-populated fields must not leak into the next decode.
       var decoder: org.apache.avro.io.BinaryDecoder = null
-      rows.map { row =>
-        try {
-          val (id, body) = unframe(row.getAs[Array[Byte]](idx))
-          expectedSchemaId.foreach(e => require(id == e, s"schema id $id != expected $e"))
-          decoder = DecoderFactory.get().binaryDecoder(body, decoder)
-          Row.fromSeq(recordToRow(reader.read(null, decoder), base).toSeq :+ null)
-        } catch {
+      def decodeRow(row: Row): Row = {
+        val (id, body) = unframe(row.getAs[Array[Byte]](idx))
+        decoder = DecoderFactory.get().binaryDecoder(body, decoder)
+        recordToRow(readerFor(id).read(null, decoder), base)
+      }
+      if (corruptCol.isEmpty) rows.map(decodeRow)
+      else rows.map { row =>
+        try Row.fromSeq(decodeRow(row).toSeq :+ null)
+        catch {
           case e: Exception =>
-            Row.fromSeq(Seq.fill[Any](n)(null) :+
-              s"${e.getClass.getSimpleName}: ${e.getMessage}")
+            Row.fromSeq(Seq.fill[Any](n)(null) :+ s"${e.getClass.getSimpleName}: ${e.getMessage}")
         }
       }
     }(Encoders.row(st))

@@ -3,7 +3,9 @@ package graft.pipeline
 import java.net.{HttpURLConnection, URI}
 import java.nio.charset.StandardCharsets
 
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import org.apache.avro.Schema
+import scala.jdk.CollectionConverters._
 
 /** Client view of a schema registry — the seam between the pipeline and the
   * schema store. [[SchemaRegistry]] is the in-process implementation (zero
@@ -22,8 +24,9 @@ trait SchemaRegistryClient {
   def snapshot(): Map[Int, String]
 }
 
-/** Confluent Schema Registry REST client on bare `HttpURLConnection` — the
-  * wire protocol is three tiny JSON endpoints, not worth a dependency:
+/** Confluent Schema Registry REST client on bare `HttpURLConnection`, with
+  * Jackson (already on the classpath) for the JSON — the wire protocol is
+  * a few tiny endpoints, not worth a client dependency:
   *
   *  - `POST /subjects/{subject}/versions` body `{"schema":"<escaped>"}`
   *    → `{"id":N}` (register; idempotent for an already-known schema)
@@ -32,42 +35,45 @@ trait SchemaRegistryClient {
   *  - `GET /subjects` / `GET /subjects/{s}/versions` (snapshot walk)
   *
   * All methods are driver-side; [[snapshot]] materializes the full id→schema
-  * map so [[ConfluentAvro.decodeAuto]] can ship it in the task closure. */
+  * map so [[ConfluentAvro.decodeAuto]], the one decoder, can ship it in the
+  * task closure. */
 class HttpSchemaRegistryClient(baseUrl: String) extends SchemaRegistryClient {
   private val base = baseUrl.stripSuffix("/")
+  private val json = new ObjectMapper()
 
   override def register(subject: String, schema: Schema): Int = {
-    val body = s"""{"schema":${JsonMini.quote(schema.toString)}}"""
+    val body = json.writeValueAsString(java.util.Map.of("schema", schema.toString))
     val resp = http("POST", s"$base/subjects/$subject/versions", Some(body))
-    JsonMini.intField(resp, "id")
+    field(resp, "id").map(_.asInt)
       .getOrElse(sys.error(s"registry register returned no id: $resp"))
   }
 
   override def schemaById(id: Int): Option[Schema] =
     httpOpt("GET", s"$base/schemas/ids/$id", None)
-      .flatMap(JsonMini.stringField(_, "schema"))
-      .map(new Schema.Parser().parse(_))
+      .flatMap(field(_, "schema"))
+      .map(s => new Schema.Parser().parse(s.asText))
 
   override def latestIdFor(subject: String): Option[Int] =
     httpOpt("GET", s"$base/subjects/$subject/versions/latest", None)
-      .flatMap(JsonMini.intField(_, "id"))
+      .flatMap(field(_, "id")).map(_.asInt)
 
   override def snapshot(): Map[Int, String] = {
-    val subjects = httpOpt("GET", s"$base/subjects", None)
-      .map(JsonMini.stringArray).getOrElse(Seq.empty)
-    subjects.flatMap { subj =>
-      val versions = httpOpt("GET", s"$base/subjects/$subj/versions", None)
-        .map(JsonMini.intArray).getOrElse(Seq.empty)
-      versions.flatMap { v =>
+    def array(url: String): Seq[JsonNode] =
+      httpOpt("GET", url, None).map(json.readTree(_).elements().asScala.toSeq).getOrElse(Seq.empty)
+    array(s"$base/subjects").map(_.asText).flatMap { subj =>
+      array(s"$base/subjects/$subj/versions").map(_.asInt).flatMap { v =>
         httpOpt("GET", s"$base/subjects/$subj/versions/$v", None).flatMap { resp =>
           for {
-            id <- JsonMini.intField(resp, "id")
-            schema <- JsonMini.stringField(resp, "schema")
-          } yield id -> schema
+            id <- field(resp, "id")
+            schema <- field(resp, "schema")
+          } yield id.asInt -> schema.asText
         }
       }
     }.toMap
   }
+
+  private def field(resp: String, name: String): Option[JsonNode] =
+    Option(json.readTree(resp).get(name))
 
   private def http(method: String, url: String, body: Option[String]): String =
     httpOpt(method, url, body).getOrElse(sys.error(s"$method $url failed"))
@@ -92,67 +98,4 @@ class HttpSchemaRegistryClient(baseUrl: String) extends SchemaRegistryClient {
       } else sys.error(s"$method $url -> HTTP $code")
     } finally conn.disconnect()
   }
-}
-
-/** Minimal JSON helpers for the registry protocol's flat payloads — string
-  * escape/unescape is the only non-trivial part (schema JSON rides INSIDE a
-  * JSON string). Not a general parser; the protocol's values are a quoted
-  * string or an int per field, and arrays of same. */
-private[graft] object JsonMini {
-  def quote(s: String): String = {
-    val b = new StringBuilder(s.length + 16).append('"')
-    s.foreach {
-      case '"'  => b.append("\\\"")
-      case '\\' => b.append("\\\\")
-      case '\n' => b.append("\\n")
-      case '\r' => b.append("\\r")
-      case '\t' => b.append("\\t")
-      case c if c < ' ' => b.append(f"\\u${c.toInt}%04x")
-      case c => b.append(c)
-    }
-    b.append('"').toString
-  }
-
-  def unquote(s: String): String = {
-    val b = new StringBuilder(s.length)
-    var i = 0
-    while (i < s.length) {
-      val c = s.charAt(i)
-      if (c == '\\' && i + 1 < s.length) {
-        s.charAt(i + 1) match {
-          case '"'  => b.append('"'); i += 2
-          case '\\' => b.append('\\'); i += 2
-          case '/'  => b.append('/'); i += 2
-          case 'n'  => b.append('\n'); i += 2
-          case 'r'  => b.append('\r'); i += 2
-          case 't'  => b.append('\t'); i += 2
-          case 'b'  => b.append('\b'); i += 2
-          case 'f'  => b.append('\f'); i += 2
-          case 'u'  => b.append(Integer.parseInt(s.substring(i + 2, i + 6), 16).toChar); i += 6
-          case other => b.append(other); i += 2
-        }
-      } else { b.append(c); i += 1 }
-    }
-    b.toString
-  }
-
-  /** Value of `"field": <int>` in a flat JSON object. */
-  def intField(json: String, field: String): Option[Int] =
-    ("\"" + java.util.regex.Pattern.quote(field) + "\"\\s*:\\s*(\\d+)").r
-      .findFirstMatchIn(json).map(_.group(1).toInt)
-
-  /** Value of `"field": "<string>"` in a flat JSON object, unescaped. The
-    * regex stops at the first unescaped quote: `[^"\\]|\\.` consumes either
-    * a plain char or a backslash-escape pair atomically. */
-  def stringField(json: String, field: String): Option[String] =
-    ("\"" + java.util.regex.Pattern.quote(field) + "\"\\s*:\\s*\"((?:[^\"\\\\]|\\\\.)*)\"").r
-      .findFirstMatchIn(json).map(m => unquote(m.group(1)))
-
-  /** `["a","b",...]` → Seq(a, b, ...) */
-  def stringArray(json: String): Seq[String] =
-    "\"((?:[^\"\\\\]|\\\\.)*)\"".r.findAllMatchIn(json).map(m => unquote(m.group(1))).toSeq
-
-  /** `[1,2,...]` → Seq(1, 2, ...) */
-  def intArray(json: String): Seq[Int] =
-    "\\d+".r.findAllIn(json).map(_.toInt).toSeq
 }

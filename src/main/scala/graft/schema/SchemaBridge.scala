@@ -1,6 +1,8 @@
 package graft.schema
 
-import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
+import java.util.Locale
+
+import com.fasterxml.jackson.databind.ObjectMapper
 import org.apache.avro.{Schema, SchemaBuilder}
 import org.apache.spark.sql.types._
 import scala.jdk.CollectionConverters._
@@ -73,15 +75,9 @@ object SchemaBridge {
   def toAvro(ss: SimpleSchema, namespace: String = "com.exam"): Schema = {
     var b = SchemaBuilder.record(ss.name).namespace(namespace).fields()
     ss.fields.foreach { case (f, t) =>
-      b = t match {
-        case "boolean" => b.name(f).`type`().booleanType().noDefault()
-        case "int"     => b.name(f).`type`().intType().noDefault()
-        case "long"    => b.name(f).`type`().longType().noDefault()
-        case "float"   => b.name(f).`type`().floatType().noDefault()
-        case "double"  => b.name(f).`type`().doubleType().noDefault()
-        case "string"  => b.name(f).`type`().stringType().noDefault()
-        case other     => throw new IllegalArgumentException(s"unsupported type $other")
-      }
+      // the dialect's type names ARE Avro's primitive names
+      require(SparkTypes.contains(t), s"unsupported type $t")
+      b = b.name(f).`type`(Schema.create(Schema.Type.valueOf(t.toUpperCase(Locale.ROOT)))).noDefault()
     }
     b.endRecord()
   }
@@ -91,16 +87,9 @@ object SchemaBridge {
   def avroToStruct(schema: Schema): StructType = {
     require(schema.getType == Schema.Type.RECORD, s"not a record: $schema")
     StructType(schema.getFields.asScala.map { f =>
-      val dt = f.schema().getType match {
-        case Schema.Type.BOOLEAN => BooleanType
-        case Schema.Type.INT     => IntegerType
-        case Schema.Type.LONG    => LongType
-        case Schema.Type.FLOAT   => FloatType
-        case Schema.Type.DOUBLE  => DoubleType
-        case Schema.Type.STRING  => StringType
-        case other => throw new IllegalArgumentException(s"unsupported avro type $other")
-      }
-      StructField(f.name(), dt, nullable = false)
+      val t = f.schema().getType.getName
+      StructField(f.name(), SparkTypes.getOrElse(t,
+        throw new IllegalArgumentException(s"unsupported avro type $t")), nullable = false)
     }.toSeq)
   }
 

@@ -10,7 +10,7 @@ import org.apache.spark.sql.streaming.{ExpiredTimerInfo, OutputMode, StatefulPro
   * event-time semantics at all; every windowing op here is new capability).
   *
   * All operators take and return streaming DataFrames so they compose with
-  * the pipeline layer (ConfluentAvro.decode upstream, the txn sink
+  * the pipeline layer (ConfluentAvro.decodeAuto upstream, the txn sink
   * downstream). Each is a thin declarative wrapper over Structured
   * Streaming built-ins — state lives in the checkpointed state store, which
   * scales horizontally with shuffle partitions (state is hash-partitioned

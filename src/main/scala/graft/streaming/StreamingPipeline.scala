@@ -1,11 +1,10 @@
 package graft.streaming
 
-import org.apache.avro.Schema
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
 
-import graft.pipeline.{ConfluentAvro, TransactionalJdbcSink}
+import graft.pipeline.TransactionalJdbcSink
 
 /** Streaming wrap of the pipeline layer (SURVEY §7 M7): source → Avro
   * decode → exactly-once JDBC sink, re-expressing the reference consumer
@@ -75,8 +74,9 @@ object StreamingPipeline {
 
   /** Open a transport spec as a streaming DataFrame. Kafka's fixed output
     * columns (key binary, value binary, topic, partition, offset, …) line
-    * up with [[decode]]'s `value` contract directly; file sources carry
-    * the declared schema. */
+    * up with [[graft.pipeline.ConfluentAvro.decodeAuto]]'s `value` contract
+    * directly (the decode is a mapPartitions projection, so it runs
+    * unchanged on a stream); file sources carry the declared schema. */
   def open(spark: SparkSession, spec: SourceSpec): DataFrame = {
     val r = spark.readStream.format(spec.format).options(spec.options)
     spec.schema.foreach(r.schema)
@@ -89,12 +89,6 @@ object StreamingPipeline {
   def fileSource(spark: SparkSession, dir: String, schema: StructType,
                  maxFilesPerTrigger: Int = 1): DataFrame =
     open(spark, fileSourceSpec(dir, schema, maxFilesPerTrigger))
-
-  /** Decode a stream of Confluent-framed Avro `value` binaries to typed
-    * columns (R10). Works unchanged on streaming DataFrames because the
-    * decode is a mapPartitions projection. */
-  def decode(framed: DataFrame, avroSchema: Schema, expectedId: Option[Int] = None): DataFrame =
-    ConfluentAvro.decode(framed, "value", avroSchema, expectedId)
 
   /** Run a stream into the exactly-once JDBC sink. The checkpoint supplies
     * replay (the reference's seek-to-stored-offset), the ledger supplies

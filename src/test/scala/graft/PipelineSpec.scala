@@ -53,6 +53,31 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  test("SchemaBridge.toAvro JSON and schema ids stay pinned") {
+    // schema ids are fingerprints of this JSON: a byte of drift moves every id
+    val pins = Seq(
+      SchemaBridge.parseSimple(simpleJson).head ->
+        (("""{"type":"record","name":"ds1","namespace":"com.exam","fields":[""" +
+          """{"name":"key_field","type":"string"},{"name":"ts_field","type":"long"},""" +
+          """{"name":"dbl_field","type":"double"},{"name":"str_field","type":"string"}]}""",
+          1232895578)),
+      // every primitive, shaped like the ingest benchmark's record
+      SimpleSchema("bench_event", Seq("key" -> "string", "ts" -> "long", "text" -> "string",
+        "qty" -> "int", "amount" -> "double", "score" -> "float", "flag" -> "boolean",
+        "tag" -> "string")) ->
+        (("""{"type":"record","name":"bench_event","namespace":"com.exam","fields":[""" +
+          """{"name":"key","type":"string"},{"name":"ts","type":"long"},""" +
+          """{"name":"text","type":"string"},{"name":"qty","type":"int"},""" +
+          """{"name":"amount","type":"double"},{"name":"score","type":"float"},""" +
+          """{"name":"flag","type":"boolean"},{"name":"tag","type":"string"}]}""",
+          136105048)))
+    pins.foreach { case (ss, (json, id)) =>
+      val avro = SchemaBridge.toAvro(ss)
+      assert(avro.toString == json)
+      assert(SchemaRegistry.idFor(avro) == id)
+    }
+  }
+
   test("SchemaBridge rejects unknown types") {
     intercept[IllegalArgumentException] {
       SchemaBridge.parseSimple("""[{"name":"x","fields":{"f":"decimal"}}]""")
@@ -169,13 +194,13 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val k = r.getAs[String]("key")
       assert(r.getAs[Int]("partition") == JavaStringHash.referencePartitionFor(k, 3))
     }
-    val dec = ConfluentAvro.decode(enc, "value", avro, expectedSchemaId = Some(id))
+    val dec = ConfluentAvro.decodeAuto(enc, "value", avro)
     val norm = (d: org.apache.spark.sql.DataFrame) =>
       d.orderBy("key_field", "ts_field", "str_field", "dbl_field").collect().toSeq
     assert(norm(dec) == norm(src))
   }
 
-  test("decodePermissive dead-letters malformed frames instead of failing the job") {
+  test("decodeAuto permissive dead-letters malformed frames instead of failing the job") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val ss = SchemaBridge.parseSimple(simpleJson).head
@@ -193,7 +218,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sparkContext.parallelize(frames, 2),
       StructType(Seq(StructField("value", BinaryType))))
 
-    val out = ConfluentAvro.decodePermissive(df, "value", avro, Some(id)).collect()
+    val out = ConfluentAvro.decodeAuto(df, "value", avro, corruptCol = Some("_corrupt")).collect()
     assert(out.length == 8)
     val (bad, ok) = out.partition(r => r.getString(r.length - 1) != null)
     assert(ok.length == 5 && bad.length == 3)
@@ -204,11 +229,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     // strict decode on the same input DOES fail — permissive is opt-in
     intercept[org.apache.spark.SparkException] {
-      ConfluentAvro.decode(df, "value", avro, Some(id)).collect()
+      ConfluentAvro.decodeAuto(df, "value", avro).collect()
     }
   }
 
-  test("decodePermissive property: survives random truncation/bit-flip/garbage frames") {
+  test("decodeAuto permissive property: survives truncation/bit-flip/garbage frames") {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val ss = SchemaBridge.parseSimple(simpleJson).head
@@ -223,7 +248,7 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       val df = spark.createDataFrame(
         spark.sparkContext.parallelize(frames.map(Row(_)), 4),
         StructType(Seq(StructField("value", BinaryType))))
-      val out = ConfluentAvro.decodePermissive(df, "value", avro, Some(id)).collect()
+      val out = ConfluentAvro.decodeAuto(df, "value", avro, corruptCol = Some("_corrupt")).collect()
       assert(out.length == frames.length, "permissive decode dropped rows")
       out
     }
@@ -311,6 +336,55 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val narrow = ConfluentAvro.decodeAuto(mixed, "value", v1)
       .orderBy("key_field").collect().map(r => (r.getString(0), r.getInt(1))).toSeq
     assert(narrow == Seq(("a", 1), ("b", 2), ("c", 3)))
+    assert(ConfluentAvro.decodeAuto(mixed, "value", v2).schema == SchemaBridge.avroToStruct(v2))
+
+    // the same versions plus three poisoned frames: a truncated one, one
+    // under an id the registry never saw, one under a registered writer the
+    // v2 reader cannot resolve (`num` as string)
+    val bad = new org.apache.avro.Schema.Parser().parse(
+      """{"type":"record","name":"evo","namespace":"com.exam","fields":[
+        |{"name":"key_field","type":"string"},{"name":"num","type":"string"}]}""".stripMargin)
+    val idBad = SchemaRegistry.register("evo-bad-value", bad)
+    val unknownId = SchemaRegistry.idFor(new org.apache.avro.Schema.Parser().parse(
+      """{"type":"record","name":"evo_never_registered","fields":[
+        |{"name":"key_field","type":"string"}]}""".stripMargin))
+    assert(SchemaRegistry.schemaById(unknownId).isEmpty)
+    val frames = mixed.select("value").collect().map(_.getAs[Array[Byte]](0)).toSeq
+    val (_, v1Body) = ConfluentAvro.unframe(frames.head)
+    val incompatible = ConfluentAvro.encode(
+      spark.createDataFrame(spark.sparkContext.parallelize(Seq(Row("d", "four")), 1),
+        StructType(Seq(StructField("key_field", StringType), StructField("num", StringType)))),
+      bad, idBad, 1).select("value").collect().map(_.getAs[Array[Byte]](0)).toSeq
+    def framedDf(fs: Seq[Array[Byte]]) = spark.createDataFrame(
+      spark.sparkContext.parallelize(fs.map(Row(_)), 1),
+      StructType(Seq(StructField("value", BinaryType))))
+    // one partition, unknown id first among the poisoned frames: strict
+    // mode stops at it
+    val poisoned = framedDf(frames ++ Seq(ConfluentAvro.frame(unknownId, v1Body),
+      frames.head.dropRight(1)) ++ incompatible)
+
+    val dl = ConfluentAvro.decodeAuto(poisoned, "value", v2, corruptCol = Some("_corrupt"))
+    assert(dl.schema == StructType(SchemaBridge.avroToStruct(v2).fields.map(_.copy(nullable = true)) :+
+      StructField("_corrupt", StringType, nullable = true)))
+    val (deadRows, okRows) = dl.collect().toSeq.partition(r => !r.isNullAt(3))
+    assert(okRows.map(r => (r.getString(0), r.getInt(1), r.getString(2))).sortBy(_._1) ==
+      Seq(("a", 1, "?"), ("b", 2, "?"), ("c", 3, "x")))
+    assert(deadRows.length == 3)
+    deadRows.foreach(r => assert((0 until 3).forall(r.isNullAt), s"partial fields leaked: $r"))
+    assert(deadRows.count(_.getString(3).contains(s"schema id $unknownId")) == 1,
+      deadRows.map(_.getString(3)).mkString("; "))
+
+    def causes(t: Throwable): String =
+      Iterator.iterate(t)(_.getCause).takeWhile(_ != null).map(_.getMessage).mkString(" <- ")
+    val strict = intercept[org.apache.spark.SparkException] {
+      ConfluentAvro.decodeAuto(poisoned, "value", v2).collect()
+    }
+    assert(causes(strict).contains(s"schema id $unknownId"), causes(strict))
+    // a registered but incompatible writer fails loudly in strict mode too
+    val incompatibleOnly = intercept[org.apache.spark.SparkException] {
+      ConfluentAvro.decodeAuto(framedDf(incompatible), "value", v2).collect()
+    }
+    assert(causes(incompatibleOnly).contains("AvroTypeException"), causes(incompatibleOnly))
   }
 
   // ------------------------------------------- exactly-once JDBC txn sink
