@@ -17,7 +17,10 @@ import graft.sources.{NioLocalFileSystem, NioLocalFs}
   *    whatever the session then says), and every state store pays a fixed
   *    commit cost on every micro-batch — ≈180 ms per RocksDB store on a
   *    4-core VM, rows or no rows — so 32 stores on 4 cores made
-  *    `dedupByContent`'s commit the dominant layer of a drain batch.
+  *    `dedupByContent`'s commit the dominant layer of a drain batch. The
+  *    sink follows the same task slots: `TransactionalJdbcSink` coalesces
+  *    its 32 content slots onto `defaultParallelism` tasks and commits one
+  *    transaction per task, 4 per batch on 4 cores instead of 32.
   *  - `spark.hadoop.fs.file.impl` / `spark.hadoop.fs.AbstractFileSystem.file.impl`
   *    = [[graft.sources.NioLocalFileSystem]] / [[graft.sources.NioLocalFs]]:
   *    stock Hadoop launches a process per local checkpoint file (one drain

@@ -2,9 +2,8 @@ package graft.pipeline
 
 import java.sql.{Connection, DriverManager, PreparedStatement, SQLException}
 
-import org.apache.spark.TaskContext
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.functions.{col, hash}
+import org.apache.spark.sql.functions.{col, hash, lit, pmod}
 import org.apache.spark.sql.types._
 
 /** Transactional exactly-once JDBC sink — the Spark-native re-expression of
@@ -13,10 +12,11 @@ import org.apache.spark.sql.types._
   * (AvroConsumer.java:157-194) with the offset ledger in a `kafka_offsets`
   * table (DataPipeline.java:150-159; upsert MySQLProcessData.java:65-92).
   *
-  * Lifted from per-record to per-(micro-batch, slot):
+  * Lifted from per-record to per-(micro-batch, slot) ledger rows, committed
+  * one transaction per task:
   *   - ledger key (query_id, batch_id, partition_id) ≙ (group, topic,
-  *     partition)+offset — one txn inserts a slot's rows + its ledger
-  *     row atomically;
+  *     partition)+offset — a slot's rows and its ledger row commit
+  *     atomically, in the same transaction as the task's other slots;
   *   - slot identity is bound to the DATA, not to runtime partition ids:
   *     the batch is repartitioned on a hash of the full row into a FIXED
   *     `numSlots` before writing, so a row's slot is a pure function of its
@@ -27,15 +27,19 @@ import org.apache.spark.sql.types._
   *     splits): a skipped pid could then hold different rows (silent loss)
   *     while reshuffled rows re-insert under new pids (duplicates). The
   *     ledger records numSlots and refuses a replay under a different count;
+  *   - the slots are coalesced onto the cluster's task slots
+  *     (min(numSlots, defaultParallelism) tasks, each holding whole slots),
+  *     and each task writes all of its slots in ONE transaction;
   *   - replay of a batch/slot (Spark task retry, stream restart from
   *     checkpoint) finds the ledger row and SKIPS — idempotent, zero dupes;
   *   - Structured Streaming's checkpoint supplies the seek/replay half the
   *     reference does with consumer.seek (AvroConsumer.java:83-93).
   *
-  * Scale: per-partition connections and batched inserts (the reference
-  * inserts one row per txn — its config caps at ~100 rec/s/partition;
-  * per-partition txns amortize that cost away). Works against any JDBC URL;
-  * tests use embedded Derby (the JDBC engine shipped with Spark).
+  * Scale: one connection and one transaction per task, batched inserts (the
+  * reference inserts one row per txn — its config caps at ~100
+  * rec/s/partition; per-task txns amortize that cost away). Works against
+  * any JDBC URL; tests use embedded Derby (the JDBC engine shipped with
+  * Spark).
   */
 class TransactionalJdbcSink(
     url: String,
@@ -143,45 +147,54 @@ class TransactionalJdbcSink(
     } finally ps.close()
   }
 
-  /** One partition's rows + ledger row in ONE transaction; skip if the
-    * ledger already has this (batch, partition) — the idempotence that makes
-    * replay exactly-once. */
-  private def writePartition(rows: Iterator[Row], schema: StructType,
-                             batchId: Long, pid: Int): Unit = {
+  /** One task's slots in ONE transaction. `rows` holds whole slots, each
+    * slot's rows contiguous, with the slot id as the last column. A slot
+    * whose (batch, slot) is already in the ledger is skipped — the
+    * idempotence that makes replay exactly-once; a ledger row written
+    * under another slot count refuses the batch. The ledger rows go in
+    * last, so another task's ledger lookups rarely meet an uncommitted
+    * row. */
+  private def writeSlots(rows: Iterator[Row], schema: StructType, batchId: Long): Unit = {
+    val slotCol = schema.length
+    val in = rows.buffered
     val conn = DriverManager.getConnection(url)
     try {
       conn.setAutoCommit(false) // AvroConsumer.java:161
-      ledgerSlots(conn, batchId, pid) match {
-        case Some(recorded) if recorded != numSlots =>
-          // slot layout changed between original write and replay — skipping
-          // would silently drop/duplicate rows; refuse loudly instead
-          conn.rollback()
-          throw new IllegalStateException(
-            s"ledger for ($queryId, batch $batchId) was written with " +
-              s"numSlots=$recorded but this sink uses numSlots=$numSlots; " +
-              "replay with the original slot count")
-        case Some(_) => // already committed: replay no-op
-          conn.rollback() // end the SELECT's txn so close() is legal
-          return
-        case None => ()
-      }
+      val written = Seq.newBuilder[(Int, Long)]
       val ps = conn.prepareStatement(insertSql(schema))
-      var n = 0L
       try {
-        rows.foreach { row =>
-          var i = 0
-          while (i < schema.length) {
-            bind(ps, i + 1, row.get(i), schema(i).dataType); i += 1
+        while (in.hasNext) {
+          val slot = in.head.getInt(slotCol)
+          val fresh = ledgerSlots(conn, batchId, slot) match {
+            case Some(recorded) if recorded != numSlots =>
+              // slot layout changed between original write and replay —
+              // skipping would silently drop/duplicate rows; refuse loudly
+              throw new IllegalStateException(
+                s"ledger for ($queryId, batch $batchId) was written with " +
+                  s"numSlots=$recorded but this sink uses numSlots=$numSlots; " +
+                  "replay with the original slot count")
+            case Some(_) => false // already committed: replay skips the slot
+            case None => true
           }
-          ps.addBatch(); n += 1
-          if (n % 1000 == 0) ps.executeBatch()
+          var n = 0L
+          while (in.hasNext && in.head.getInt(slotCol) == slot) {
+            val row = in.next()
+            if (fresh) {
+              var i = 0
+              while (i < schema.length) {
+                bind(ps, i + 1, row.get(i), schema(i).dataType); i += 1
+              }
+              ps.addBatch(); n += 1
+              if (n % 1000 == 0) ps.executeBatch()
+            }
+          }
+          if (fresh) { ps.executeBatch(); written += slot -> n }
         }
-        ps.executeBatch()
       } finally ps.close()
       val lp = conn.prepareStatement(
         s"""INSERT INTO ${q(ledgerTable)} (query_id, batch_id, partition_id, row_count, n_slots) VALUES (?,?,?,?,?)""")
-      try {
-        lp.setString(1, queryId); lp.setLong(2, batchId); lp.setInt(3, pid)
+      try written.result().foreach { case (slot, n) =>
+        lp.setString(1, queryId); lp.setLong(2, batchId); lp.setInt(3, slot)
         lp.setLong(4, n); lp.setInt(5, numSlots)
         lp.executeUpdate()
       } finally lp.close()
@@ -197,8 +210,8 @@ class TransactionalJdbcSink(
     * task runs: under a changed numSlots, slot ids absent from the ledger
     * would commit their (re-sliced, overlapping) rows and the job would only
     * fail afterwards on the ledgered ids — leaked duplicates. The
-    * per-partition check alone can't prevent that; this driver-side gate
-    * can. */
+    * per-slot check in the tasks alone can't prevent that; this
+    * driver-side gate can. */
   private def requireConsistentSlots(batchId: Long): Unit = {
     val conn = DriverManager.getConnection(url)
     try {
@@ -231,17 +244,24 @@ class TransactionalJdbcSink(
     * The repartition makes slot membership content-determined: Murmur3 of
     * the whole row, modulo a fixed numSlots (explicit numPartitions — AQE
     * never coalesces a user-specified count). Replayed rows land in the
-    * same slot regardless of how the upstream plan partitioned them. */
+    * same slot regardless of how the upstream plan partitioned them.
+    * `__slot` spells out the partition id that repartition assigns, and
+    * the coalesce to the cluster's task slots hands each task whole
+    * shuffle partitions, so a task commits its slots in one transaction
+    * while the ledger still records one row per non-empty (batch, slot). */
   def writeBatch(df: DataFrame, batchId: Long): Unit = {
     requireConsistentSlots(batchId)
     val schema = df.schema
-    val slotted = df.repartition(numSlots, hash(df.columns.map(col): _*))
-    slotted.foreachPartition { (rows: Iterator[Row]) =>
-      // skip empty slots entirely: small micro-batches would otherwise pay
-      // numSlots connections + txns + ledger rows per batch. Safe for
-      // replay — an empty slot re-derives as empty and inserts nothing.
-      if (rows.hasNext) writePartition(rows, schema, batchId, TaskContext.getPartitionId())
-    }
+    val rowHash = hash(df.columns.map(col): _*)
+    val tasks = math.min(numSlots, df.sparkSession.sparkContext.defaultParallelism)
+    df.repartition(numSlots, rowHash)
+      .withColumn("__slot", pmod(hash(rowHash), lit(numSlots)))
+      .coalesce(tasks)
+      .foreachPartition { (rows: Iterator[Row]) =>
+        // an empty task opens no connection, and a slot with no rows gets
+        // no ledger row — an empty slot re-derives as empty on replay
+        if (rows.hasNext) writeSlots(rows, schema, batchId)
+      }
   }
 
   // ---- verification helpers (driver-side, small results) ----

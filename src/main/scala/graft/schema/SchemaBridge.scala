@@ -34,7 +34,9 @@ object SchemaBridge {
     require(root.isArray, "simple schema document must be a JSON array")
     root.elements().asScala.map { node =>
       val name = node.get("name").asText()
-      val fields = node.get("fields").properties().asScala
+      // iterate in document order: mapping the entry Set view would build
+      // a hash set and lose the declared (semantic) field order
+      val fields = node.get("fields").properties().iterator.asScala
         .map(e => e.getKey -> normalizeType(e.getValue.asText())).toSeq
       fields.foreach { case (f, t) =>
         require(SparkTypes.contains(t), s"unsupported type '$t' for field '$f'")

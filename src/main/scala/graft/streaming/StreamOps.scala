@@ -68,15 +68,23 @@ object StreamOps {
     * distinct doc in the horizon — never the corpus. NULL-text rows pass
     * through un-deduped (a NULL fingerprint is not a dup claim — the same
     * contract as the batch q79 oracle), and the output schema equals the
-    * input schema (the fingerprint column is internal). */
+    * input schema (the fingerprint column is internal).
+    *
+    * The NULL pass-through is a second branch over the same input, and
+    * Catalyst does not prune it in a micro-batch even when it can hold no
+    * row: it keeps a second full scan (and decode) of each batch. So the
+    * branch exists only when `textCol` is nullable (MemoryStream, permissive
+    * decode, a raw file source); over strict `decodeAuto` output, which is
+    * non-nullable, each batch is read once. */
   def dedupByContent(df: DataFrame, tsCol: String, watermark: String,
                      textCol: String = "text"): DataFrame = {
-    val withFp = df.withColumn("__fp", unhex(md5(col(textCol))))
-    withFp.filter(col("__fp").isNotNull)
+    val deduped = df.filter(col(textCol).isNotNull)
+      .withColumn("__fp", unhex(md5(col(textCol))))
       .withWatermark(tsCol, watermark)
       .dropDuplicatesWithinWatermark(Seq("__fp"))
       .drop("__fp")
-      .unionByName(withFp.filter(col("__fp").isNull).drop("__fp"))
+    if (df.schema(textCol).nullable) deduped.unionByName(df.filter(col(textCol).isNull))
+    else deduped
   }
 
   /** Streaming NB quality scoring — the ingest-time twin of the batch

@@ -38,7 +38,11 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
     val ss = SchemaBridge.parseSimple(simpleJson)
     assert(ss.map(_.name) == Seq("ds1", "ds2"))
     assert(ss(1).fields.toMap.apply("int_field") == "int") // alias rewritten
-    assert(ss(0).fields.head._1 == "key_field") // field order preserved
+    // declared field order preserved: the reference keys by field 0
+    assert(ss(0).fields == Seq("key_field" -> "string", "ts_field" -> "long",
+      "str_field" -> "string", "dbl_field" -> "double"))
+    assert(ss(1).fields == Seq("ts_field" -> "long", "int_field" -> "int",
+      "flt_field" -> "float", "bool_field" -> "boolean"))
   }
 
   test("SchemaBridge round-trips simple -> avro -> struct -> avro") {
@@ -59,8 +63,8 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
       SchemaBridge.parseSimple(simpleJson).head ->
         (("""{"type":"record","name":"ds1","namespace":"com.exam","fields":[""" +
           """{"name":"key_field","type":"string"},{"name":"ts_field","type":"long"},""" +
-          """{"name":"dbl_field","type":"double"},{"name":"str_field","type":"string"}]}""",
-          1232895578)),
+          """{"name":"str_field","type":"string"},{"name":"dbl_field","type":"double"}]}""",
+          1039151321)),
       // every primitive, shaped like the ingest benchmark's record
       SimpleSchema("bench_event", Seq("key" -> "string", "ts" -> "long", "text" -> "string",
         "qty" -> "int", "amount" -> "double", "score" -> "float", "flag" -> "boolean",
@@ -462,6 +466,54 @@ class PipelineSpec extends AnyFunSuite with BeforeAndAfterAll {
         val key = df.columns.head
         assert(back.select(key).distinct().count() == df.select(key).distinct().count())
       }
+
+      // a replay that finds SOME of a batch's slots ledgered (a task that
+      // committed before the crash, next to one that did not) lands exactly
+      // the un-ledgered slots' rows, even though one task's transaction
+      // spans several slots
+      // the sink's slot function: the partition repartition(n, hash(cols)) assigns
+      def slotOf(n: Int) = pmod(hash(hash(df.columns.map(col): _*)), lit(n))
+      def ds1() = spark.read.format("jdbc").option("url", url).option("dbtable", """"ds1"""").load()
+        .select(df.columns.map(col): _*)
+      val done = Seq(0, 2)
+      val lconn = java.sql.DriverManager.getConnection(url)
+      try done.foreach(s => lconn.createStatement().execute(
+        s"""INSERT INTO "batch_ledger" (query_id, batch_id, partition_id, row_count, n_slots)
+           | VALUES ('query-A', 2, $s, 0, 4)""".stripMargin))
+      finally lconn.close()
+      val before = ds1().collect().toSeq
+      sink.writeBatch(df, batchId = 2)
+      val fresh = df.filter(!slotOf(4).isin(done: _*))
+      val landed = ds1()
+      val expected = spark.createDataFrame(spark.sparkContext.parallelize(before), df.schema)
+        .union(fresh)
+      assert(landed.count() == 2000 + fresh.count())
+      assert(landed.exceptAll(expected).isEmpty && expected.exceptAll(landed).isEmpty,
+        "a replay landed rows of a ledgered slot or lost rows of an un-ledgered one")
+      val slots4 = df.select(slotOf(4)).distinct().count()
+      assert(sink.ledgerCount() == 8 + slots4,
+        "one ledger row per non-empty (batch, slot)")
+
+      // the sink stage runs one task per task slot of the cluster, not one
+      // per slot: 32 slots on local[4] commit in 4 transactions
+      val wide = new TransactionalJdbcSink(url, "ds1", "query-B")
+      val stages = new java.util.concurrent.ConcurrentLinkedQueue[(Int, Int)]()
+      val listener = new org.apache.spark.scheduler.SparkListener {
+        override def onStageCompleted(e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+          stages.add(e.stageInfo.stageId -> e.stageInfo.numTasks)
+      }
+      spark.sparkContext.addSparkListener(listener)
+      try wide.writeBatch(df, batchId = 0)
+      finally {
+        org.apache.spark.graft.ListenerBusFlush.flush(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      import scala.jdk.CollectionConverters._
+      val sinkTasks = stages.asScala.maxBy(_._1)._2
+      assert(sinkTasks == math.min(32, spark.sparkContext.defaultParallelism),
+        s"sink stage ran $sinkTasks tasks")
+      assert(wide.ledgerCount() == 8 + slots4 + df.select(slotOf(32)).distinct().count())
+      assert(wide.dataCount() == 3000 + fresh.count())
     }
   }
 

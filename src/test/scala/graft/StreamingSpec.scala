@@ -1414,7 +1414,8 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
         def land(f: Int): Unit =
           ConfluentAvro.encode(rows(f), avro, id, 1).coalesce(1)
             .write.mode("append").parquet(srcDir)
-        def run(): Seq[Int] = {
+        // (state partitions per progress, Σ numInputRows over the run)
+        def run(): (Seq[Int], Long) = {
           val stream = StreamingPipeline.fileSource(
             spark, srcDir, spark.read.parquet(srcDir).schema, maxFilesPerTrigger = 1)
           val deduped = StreamOps.dedupByContent(
@@ -1426,17 +1427,23 @@ class StreamingSpec extends AnyFunSuite with BeforeAndAfterAll {
           val q = StreamingPipeline.toJdbc(deduped, sink, ckpt)
           try assert(q.awaitTermination(120000), "stream did not drain")
           finally q.stop()
-          q.recentProgress.toSeq.flatMap(p => Option(p.stateOperators).toSeq.flatten)
-            .map(_.numShufflePartitions.toInt)
+          val progress = q.recentProgress.toSeq
+          (progress.flatMap(p => Option(p.stateOperators).toSeq.flatten)
+            .map(_.numShufflePartitions.toInt), progress.map(_.numInputRows).sum)
         }
 
         Seq(0, 1).foreach(land)
-        assert(run().toSet == Set(8), "first run must build its state under the session's 8")
+        val (first, firstRead) = run()
+        assert(first.toSet == Set(8), "first run must build its state under the session's 8")
+        // strict decode leaves `text` non-nullable, so dedupByContent adds no
+        // NULL pass-through branch and each framed row is scanned once
+        assert(firstRead == 2 * 2 * distinct, s"read $firstRead source rows for ${2 * 2 * distinct}")
         spark.conf.set(partsKey, "4")
         Seq(2, 3).foreach(land)
-        val resumed = run()
+        val (resumed, resumedRead) = run()
         assert(resumed.nonEmpty && resumed.toSet == Set(8),
           s"restart must keep the checkpoint's 8 state partitions, saw ${resumed.distinct}")
+        assert(resumedRead == 2 * 2 * distinct, s"read $resumedRead source rows for ${2 * 2 * distinct}")
 
         val landed = spark.read.format("jdbc")
           .option("url", url).option("dbtable", """"ckparts"""").load()
